@@ -1,101 +1,132 @@
 """Distributed link analysis over co-occurrence graphs.
 
-PageRank (Page et al., "The PageRank Citation Ranking", 1999) as pure
-join+aggregate iterations on the exact integer picos lattice: every rank
-is a BIGINT number of 1e-12 rank units, teleport and damping are integer
-``div`` operations, and per-edge contributions are summed as longs -- so
-the trajectory is bit-identical at any partitioning AND replayable in any
-SQL engine (the graded oracle unrolls the same iterations in DuckDB).
-Floor division leaks a sub-ppm of rank mass per hop; ordering is
-unaffected and exactness is what buys the cross-engine value-hash.
+Every iterative operator here runs on an exact integer lattice: PageRank
+(Page et al., "The PageRank Citation Ranking", 1999) in BIGINT picos
+(1e-12 of total mass), HITS and Katz in nanos, with floor division
+applied per edge per hop -- so each trajectory is bit-identical at any
+partitioning AND replayable in any SQL engine (the graded oracles unroll
+the same iterations in DuckDB). Floor division leaks a sub-ppm of mass
+per hop; ordering is unaffected and exactness is what buys the
+cross-engine value-hash.
 
-100 TB shape: the edge table is built per-basket (self-equi-join on the
-basket key -- quadratic only in each basket's own distinct-item count,
-never a global product, same discipline as relational.basket_pairs); each
-iteration is ONE shuffle join of the rank table against the
-degree-annotated edges plus one keyed aggregation -- no driver state
-except the scalar node count. Lineage is cut per round with
-``localCheckpoint`` (the dedup.connected_components pattern). For a
-long-running iterative deployment, :func:`pagerank_bucketed` persists the
-degree-annotated edges bucketed by SRC so only the (small) rank table
-moves per iteration -- the edge side of every hop reads bucket-local with
-zero exchange (plan-pinned in tests/test_graph.py).
+Three private helpers hold the policies every hop loop shares, so each
+operator is only its step function:
+
+- ``_prep`` materializes the edge stream once (``_ckpt_edges``: a lazy
+  serialized checkpoint plus one count that sizes its partition width)
+  and derives the node universe, its degree / strength columns and the
+  bounded driver scalars from ONE shuffle: the SRC and DST arms of the
+  edge list, each tagged with flag columns, unioned and folded by a
+  single groupBy. No driver state beyond those scalars.
+- ``_hop`` is one edge x node-frame join, the per-edge projection and the
+  keyed aggregation. It owns the join policy (``_node_side``): broadcast
+  the node-sized side while an upper bound on its rows fits the byte
+  budget, else shuffled-hash -- never a sort-merge that re-sorts the
+  edge side every hop.
+- ``_cut`` is the only lineage cut: a lazy ``localCheckpoint`` per round
+  (serialized memory+disk for edge-sized frames), and the identity under
+  ``checkpoint=False``.
+
+The bucketed twins (:func:`pagerank_bucketed`,
+:func:`pagerank_weighted_bucketed`, :func:`hits_bucketed`) are a LAYOUT
+input to the same prep and loop, not second implementations: bucketing
+changes where the edge bytes live, never the arithmetic, so a second
+loop would only be a second copy of each recurrence to keep in step.
+The edge list is persisted once, hash-bucketed and sorted on the hop's
+join key; ``_prep`` reads the universe from the persisted table, and
+``_hop`` forces a sort-merge join so every hop reads the edge side
+bucket-local with zero exchange (plan-pinned in tests/test_graph.py) --
+only the node-sized frame moves per iteration. One recurrence, :func:`_pagerank`,
+serves all five PageRank entry points through a per-edge weight (unit
+weights reproduce the unweighted integers exactly) and a teleport target
+(uniform, or a seed set).
 """
 
 from __future__ import annotations
 
 import math
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 PR_SCALE = 10**12  # rank unit = 1e-12 of total mass ("picos")
 
 
-def _ckpt_big(df: DataFrame) -> DataFrame:
-    """Lineage cut for EDGE-SIZED intermediates: localCheckpoint with
-    SERIALIZED memory+disk storage. The JVM default materializes
-    deserialized row objects, which inflate an edge table 3-5x and took
-    the 100x decade bench down with 'java.lang.OutOfMemoryError: Java
-    heap space' inside maybeCacheDiskValuesInMemory; serialized blocks
-    spill gracefully instead. Node-sized frames (ranks, labels, degree
-    tables) keep the default level -- they are small and hot."""
-    from pyspark import StorageLevel
-
-    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-
-
-# Broadcast ceiling for the node-sized side of a hop join, derived from
-# ESTIMATED BUILD BYTES (VERDICT r8 item 5 / ADVICE r8: a row-count
-# ceiling of 8M justified as "~16 B/row" ignored the BroadcastHashRelation
-# overhead -- UnsafeRow headers + the hash map cost ~50-100+ bytes per
-# narrow (long, long) row, so 8M rows is really a multi-hundred-MB
-# per-executor build). The default caps the ESTIMATE at 256 MB:
-# rows_max = 256 MB / (48 B fixed + 16 B per column). Scale-adaptive by
-# DATA (the caller passes the measured node count, a driver scalar every
-# iterative operator already holds), not by core count.
-# SPARK_GRAFT_GRAPH_BCAST_MAX (a row count) still overrides when set;
-# 0 forces the shuffled-hash fallback everywhere.
-_BCAST_MAX_NODES = (
-    int(os.environ["SPARK_GRAFT_GRAPH_BCAST_MAX"])
-    if os.environ.get("SPARK_GRAFT_GRAPH_BCAST_MAX")
-    else None
-)
-_BCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES", str(256 * 1024**2))
-)
+def _cut(df: DataFrame, checkpoint: bool, big: bool = False) -> DataFrame:
+    """Lineage cut for a hop loop: lazy localCheckpoint, or ``df`` itself
+    under ``checkpoint=False``. EDGE-SIZED frames (``big``) are stored
+    SERIALIZED memory+disk: the JVM default materializes deserialized row
+    objects, which inflate an edge table 3-5x and took the 100x decade
+    bench down with 'java.lang.OutOfMemoryError: Java heap space' inside
+    maybeCacheDiskValuesInMemory; serialized blocks spill gracefully
+    instead. Node-sized frames (ranks, labels, degree tables) keep the
+    default level -- they are small and hot."""
+    if not checkpoint:
+        return df
+    level = StorageLevel.MEMORY_AND_DISK if big else None
+    return df.localCheckpoint(eager=False, storageLevel=level)
 
 
 def _bcast_row_ceiling(n_cols: int) -> int:
     """Row ceiling for a broadcast hash relation of ``n_cols`` narrow
-    columns under the byte budget: ~48 B/row fixed (UnsafeRow header +
-    hash-map slot/chaining) + ~16 B per long-ish column."""
-    return _BCAST_MAX_BYTES // (48 + 16 * max(n_cols, 1))
+    columns under the byte budget SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES
+    (default 256 MB; 0 forces the shuffled-hash fallback everywhere):
+    ~48 B/row fixed (UnsafeRow header + hash-map slot/chaining) + ~16 B
+    per long-ish column. A row-count ceiling justified as "~16 B/row"
+    would ignore that overhead and make a multi-hundred-MB per-executor
+    build."""
+    raw = os.environ.get("SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES") or str(256 * 1024**2)
+    try:
+        budget = int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES must be an integer byte count, got {raw!r}"
+        ) from None
+    return budget // (48 + 16 * max(n_cols, 1))
 
 
 def _node_side(frame: DataFrame, n: int) -> DataFrame:
-    """Join-strategy policy for the NODE-SIZED side (ranks / labels /
-    scores / frontier / degree map) of an edge x node hop join.
+    """Join-strategy policy for the NODE-SIZED side of a hop join, given
+    ``n`` >= its row count.
 
     The default SMJ re-sorts the EDGE side every hop (measured: ~45% of a
     3-hop pagerank at the 10x point); broadcasting the node frame leaves
-    the edge scan shuffle- and sort-free, so a hop costs one checkpoint
-    scan + the keyed contribution aggregation -- guide section 3.1's
-    "broadcast the side that fits", with the fit decided by the MEASURED
-    node count x estimated build bytes rather than Catalyst's LogicalRDD
-    size guess (which is `defaultSizeInBytes`, i.e. never broadcastable).
-    Above the ceiling, shuffled-hash still beats SMJ: the node side
-    shuffles, but neither side sorts. Values are join-strategy-independent
-    (exact integer lattice), pinned by the unrolled-CTE oracles."""
-    ceiling = (
-        _BCAST_MAX_NODES
-        if _BCAST_MAX_NODES is not None
-        else _bcast_row_ceiling(len(frame.columns))
-    )
-    if n <= ceiling:
+    the edge scan shuffle- and sort-free -- with the fit decided by the
+    MEASURED node count x estimated build bytes rather than Catalyst's
+    LogicalRDD size guess (which is `defaultSizeInBytes`, i.e. never
+    broadcastable). Above the ceiling, shuffled-hash still beats SMJ: the
+    node side shuffles, but neither side sorts. Values are
+    join-strategy-independent (exact integer lattice)."""
+    if n <= _bcast_row_ceiling(len(frame.columns)):
         return F.broadcast(frame)
     return frame.hint("shuffle_hash")
+
+
+def _hop(
+    ed: DataFrame,
+    frame: DataFrame,
+    rows: int,
+    cols: Sequence[Column | str],
+    on: str = "SRC",
+    aggs: Sequence[Column] = (),
+    merge: bool = False,
+) -> DataFrame:
+    """One hop: join the node frame (keyed NODE, at most ``rows`` rows)
+    onto ``ed[on]``, project ``cols`` per edge and, given ``aggs``,
+    aggregate them by NODE (partial-aggregated map-side, so the
+    shuffle carries at most nodes-per-partition rows, never the edge
+    cardinality). ``merge`` marks ``ed`` as a table bucketed and sorted on
+    ``on``: the sort-merge hint then keeps the edge scan exchange-free and
+    only the node frame is exchanged to the bucket layout."""
+    if merge:
+        ed = ed.hint("merge")
+    else:
+        frame = _node_side(frame, rows)
+    out = ed.join(frame, ed[on] == frame["NODE"]).select(*cols)
+    return out.groupBy("NODE").agg(*aggs) if aggs else out
 
 
 # Width policy for checkpointed frames that hop loops scan repeatedly:
@@ -105,33 +136,26 @@ def _node_side(frame: DataFrame, n: int) -> DataFrame:
 # as 1-2 partitions and serialize every hop onto 1-2 cores (measured:
 # 2.6-3.0 s single-task stages inside every copurchase pagerank hop at
 # sf0.1, and the single-task decade blowup at 100x). The repartition
-# target derives from the MEASURED row count (guide section 2: make
-# partitioning scale-adaptive from input size): at least the cluster
-# width, at most one partition per _EDGE_ROWS_PER_PART rows; frames whose
+# target derives from the MEASURED row count: at least the cluster width,
+# at most one partition per _EDGE_ROWS_PER_PART rows; frames whose
 # materialized layout already meets the target are left untouched (the
 # common case at scale, where byte-based AQE sizing is already right).
 _EDGE_ROWS_PER_PART = 2_000_000  # ~64 MB of narrow long rows
 _MIN_ROWS_TO_WIDEN = 50_000  # below this a narrow layout is fine
 
 
-def _ckpt_edges(
-    df: DataFrame, checkpoint: bool, count: bool = True
-) -> tuple[DataFrame, int | None]:
+def _ckpt_edges(df: DataFrame, checkpoint: bool) -> tuple[DataFrame, int | None]:
     """Materialize a multiply-consumed edge-sized frame ONCE and give it
-    compute-proportional width. Lazy serialized localCheckpoint, then one
-    bounded count (the driver scalar most callers need anyway) to (a)
-    force materialization inside ONE query execution -- deriving nodes /
-    degrees / hops from the checkpoint instead of from parallel lineage,
-    which re-executes the whole build per consumer (exchange reuse does
-    not cross query executions; measured as the basket->pair pipeline
-    running twice per pagerank call) -- and (b) feed the width policy
-    above. Returns (frame, row_count); checkpoint=False passes the frame
-    through untouched (count=None)."""
+    compute-proportional width. The count (the driver scalar most callers
+    need anyway) forces materialization inside ONE query execution, so
+    nodes / degrees / hops derive from the checkpoint instead of from
+    parallel lineage, which would re-execute the whole build per consumer
+    (exchange reuse does not cross query executions); it also feeds the
+    width policy above. Returns (frame, row_count); checkpoint=False
+    passes the frame through untouched (count=None)."""
     if not checkpoint:
         return df, None
-    ck = _ckpt_big(df)
-    if not count:
-        return ck, None
+    ck = _cut(df, True, big=True)
     n = ck.count()
     sc = df.sparkSession.sparkContext
     target = max(sc.defaultParallelism, math.ceil(n / _EDGE_ROWS_PER_PART))
@@ -140,8 +164,52 @@ def _ckpt_edges(
         # partition) and deterministic under retry (sort-before-repartition
         # is on by default); the frame is small by construction here --
         # wide layouts skip this branch -- so the extra pass is cheap.
-        ck = _ckpt_big(ck.repartition(target))
+        ck = _cut(ck.repartition(target), True, big=True)
     return ck, n
+
+
+def _prep(
+    edges: DataFrame,
+    checkpoint: bool,
+    aggs: Sequence[Column] = (),
+    src: Sequence[Column] = (),
+    dst: Sequence[Column] | None = (),
+    scalars: Sequence[Column] = (),
+    ends: tuple[str, str] = ("SRC", "DST"),
+    bucketed: bool = False,
+) -> tuple[DataFrame, DataFrame, dict]:
+    """Edge stream, node frame and driver scalars for one operator.
+
+    The edge stream is materialized first (``_ckpt_edges``; a bucketed
+    table is already persisted and is used as is). The node frame is the
+    union of the ``ends[0]`` arm (extra columns ``src``) and the
+    ``ends[1]`` arm (``dst``; None when every edge has its mirror, so the
+    universe is the source set) folded by ONE groupBy(NODE).agg(``aggs``)
+    -- or a distinct without ``aggs`` -- and cut. The scalars are one row:
+    ``n`` (the universe size) plus ``scalars`` over the node frame."""
+    ed = edges if bucketed else _ckpt_edges(edges, checkpoint)[0]
+    arms = ed.select(F.col(ends[0]).alias("NODE"), *src)
+    if dst is not None:
+        arms = arms.unionAll(ed.select(F.col(ends[1]).alias("NODE"), *dst))
+    nd = _cut(arms.groupBy("NODE").agg(*aggs) if aggs else arms.distinct(), checkpoint)
+    if not scalars:
+        return ed, nd, {"n": nd.count()}
+    row = nd.agg(F.count(F.lit(1)).alias("n"), *scalars).first()
+    return ed, nd, {k: int(v or 0) for k, v in row.asDict().items()}
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Distinct undirected edges (A, B), A < B, self-loops dropped."""
+    return (
+        edges.select(F.least("SRC", "DST").alias("A"), F.greatest("SRC", "DST").alias("B"))
+        .where(F.col("A") != F.col("B"))
+        .distinct()
+    )
+
+
+def _degree() -> list[Column]:
+    """The per-node edge count, as the one aggregate of a degree prep."""
+    return [F.count(F.lit(1)).cast("long").alias("DEG")]
 
 
 def triangle_counts(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
@@ -172,48 +240,34 @@ def triangle_counts(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     in one row; cap or pre-split super-hubs upstream if the input can
     contain one.
 
-    ``und``/``deg``/``ori`` are each referenced 2-3 times downstream;
-    without materialization every reference re-expands its whole subtree
-    (measured: 94 input scans / 238 exchanges in the unchecked plan), so
-    they are localCheckpoint'ed once and reused -- the same
-    lineage-cutting discipline as connected components and pagerank.
+    The undirected edges, the degree map and the oriented edges are each
+    referenced 2-3 times downstream; without materialization every
+    reference re-expands its whole subtree (measured: 94 input scans /
+    238 exchanges in the unchecked plan), so each is cut once and reused.
     """
-    und, _ = _ckpt_edges(
-        edges.select(
-            F.least("SRC", "DST").alias("A"), F.greatest("SRC", "DST").alias("B")
-        )
-        .where(F.col("A") != F.col("B"))
-        .distinct(),
-        checkpoint,
-    )
-    deg = (
-        und.select(F.col("A").alias("N"))
-        .unionAll(und.select(F.col("B").alias("N")))
-        .groupBy("N")
-        .agg(F.count(F.lit(1)).cast("long").alias("DEG"))
-    )
-    if checkpoint:
-        deg = deg.localCheckpoint(eager=False)
-    n_nodes = deg.count()  # bounded driver scalar: sizes the join policy
-    da = deg.select(F.col("N").alias("A"), F.col("DEG").alias("DA"))
-    db = deg.select(F.col("N").alias("B"), F.col("DEG").alias("DB"))
-    ad = und.join(_node_side(da, n_nodes), "A").join(_node_side(db, n_nodes), "B")
+    und, deg, s = _prep(_undirected(edges), checkpoint, _degree(), ends=("A", "B"))
+    da = deg.select("NODE", F.col("DEG").alias("DA"))
+    db = deg.select("NODE", F.col("DEG").alias("DB"))
+    ad = _hop(und, da, s["n"], ["A", "B", "DA"], on="A")
+    ad = _hop(ad, db, s["n"], ["A", "B", "DA", "DB"], on="B")
     lo_first = F.struct(F.col("DA"), F.col("A")) < F.struct(F.col("DB"), F.col("B"))
-    ori = ad.select(
-        F.when(lo_first, F.col("A")).otherwise(F.col("B")).alias("SRC"),
-        F.when(lo_first, F.col("B")).otherwise(F.col("A")).alias("DST"),
-        F.when(lo_first, F.col("DB")).otherwise(F.col("DA")).alias("DDEG"),
+    # the oriented edges inherit width from the (possibly widened) und
+    # checkpoint via the narrow broadcast-join chain -- no second count
+    ori = _cut(
+        ad.select(
+            F.when(lo_first, F.col("A")).otherwise(F.col("B")).alias("SRC"),
+            F.when(lo_first, F.col("B")).otherwise(F.col("A")).alias("DST"),
+            F.when(lo_first, F.col("DB")).otherwise(F.col("DA")).alias("DDEG"),
+        ),
+        checkpoint,
+        big=True,
     )
-    if checkpoint:
-        # inherits width from the (possibly widened) und checkpoint via
-        # the narrow broadcast-join chain -- no second count/repartition
-        ori = _ckpt_big(ori)
     # wedges enumerate IN-ROW: each oriented source's out-neighbors,
-    # sorted by the same (DDEG, DST) rank the old self-join compared,
-    # explode to exactly the ordered pairs -- no generate-then-discard
-    # self-join; the oriented out-degree bound (O(sqrt E)) bounds the
-    # per-row array. The closing-edge probe hints shuffle-hash so the
-    # (much larger) wedge stream is neither sorted nor buffered.
+    # sorted by the same (DDEG, DST) rank a self-join would compare,
+    # explode to exactly the ordered pairs; the oriented out-degree bound
+    # (O(sqrt E)) bounds the per-row array. The closing-edge probe hints
+    # shuffle-hash so the (much larger) wedge stream is neither sorted
+    # nor buffered.
     wedges = (
         ori.groupBy("SRC")
         .agg(
@@ -236,17 +290,17 @@ def triangle_counts(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     closing = ori.select(F.col("SRC").alias("V"), F.col("DST").alias("W"))
     tri = wedges.join(closing.hint("shuffle_hash"), ["V", "W"]).select("U", "V", "W")
     per_node = (
-        tri.select(F.col("U").alias("N"))
-        .unionAll(tri.select(F.col("V").alias("N")))
-        .unionAll(tri.select(F.col("W").alias("N")))
-        .groupBy("N")
+        tri.select(F.col("U").alias("NODE"))
+        .unionAll(tri.select(F.col("V").alias("NODE")))
+        .unionAll(tri.select(F.col("W").alias("NODE")))
+        .groupBy("NODE")
         .agg(F.count(F.lit(1)).cast("long").alias("N_TRIANGLES"))
     )
     return (
-        deg.join(per_node, "N", "left")
+        deg.join(per_node, "NODE", "left")
         .select(
-            F.col("N").alias("NODE"),
-            F.col("DEG"),
+            "NODE",
+            "DEG",
             F.coalesce(F.col("N_TRIANGLES"), F.lit(0)).cast("long").alias("N_TRIANGLES"),
             F.when(F.col("DEG") >= 2, F.expr(
                 "(2000000 * coalesce(N_TRIANGLES, 0)) div (DEG * (DEG - 1))"
@@ -265,17 +319,16 @@ def copurchase_edges(df: DataFrame, basket_col: str, item_col: str) -> DataFrame
     thousands of distinct items (the documented basket_pairs hazard)."""
     # ONE exchange builds each basket's sorted distinct-item array
     # (collect_set dedups intra-basket repeats in the same agg), and a
-    # nested transform explodes exactly the SRC < DST pairs in-row -- the
-    # old shape paid a (basket, item) distinct plus a self-join (4
-    # exchanges where this has 2). Canonical SRC < DST pairs first: the
-    # dedup shuffle carries HALF the rows. Mirroring is an EXPLODE in the
-    # same pass -- a union of the distinct with its own flipped projection
-    # would recompute the pair stage per branch (no stage reuse across
-    # union arms, measured: 33 s -> 56 s at the 10x point)
+    # nested transform explodes exactly the SRC < DST pairs in-row.
+    # Canonical SRC < DST pairs first: the dedup shuffle carries HALF the
+    # rows. Mirroring is an EXPLODE in the same pass -- a union of the
+    # distinct with its own flipped projection would recompute the pair
+    # stage per branch (no stage reuse across union arms, measured:
+    # 33 s -> 56 s at the 10x point)
     pairs = (
-        # NULL baskets carry no co-occurrence signal (ADVICE r8: the old
-        # self-join form never matched NULL keys; groupBy would collapse
-        # them into ONE pseudo-basket and emit spurious pairs)
+        # NULL baskets carry no co-occurrence signal (ADVICE r8: groupBy
+        # would collapse them into ONE pseudo-basket and emit spurious
+        # pairs)
         df.select(F.col(basket_col).alias("__b"), F.col(item_col).alias("__i"))
         .where(F.col("__b").isNotNull())
         .groupBy("__b")
@@ -302,54 +355,112 @@ def copurchase_edges(df: DataFrame, basket_col: str, item_col: str) -> DataFrame
     ).select("__e.SRC", "__e.DST")
 
 
-def _graph_prep(edges: DataFrame, checkpoint: bool, symmetric: bool = False):
-    """Shared PageRank preamble: the materialized pair stream (SRC, DST),
-    the node UNIVERSE (distinct SRC union DST) with its out-degree
-    (0 = dangling), and the three bounded driver scalars (universe size,
-    out-node count, in-node count) that pick the recurrence path.
+def _pagerank(
+    edges: DataFrame,
+    iterations: int,
+    scale: int,
+    damping_pct: int,
+    checkpoint: bool,
+    symmetric: bool = False,
+    seeds: list[int] | None = None,
+    weighted: bool = False,
+    bucketed: bool = False,
+) -> DataFrame:
+    """The one PageRank recurrence. N = |node universe|, K = |teleport
+    targets| (N, or the seeds present in the universe), D_t = total rank
+    on dangling (zero-strength) nodes at step t, strength(u) = sum of u's
+    out-weights (its out-degree under unit weights):
 
-    Round-9 shape: the pair stream is checkpointed FIRST (_ckpt_edges),
-    and everything else -- degrees, universe, scalars -- derives from the
-    checkpoint, so the (possibly expensive) edge build executes exactly
-    once; the old shape built deg/nd/ed on parallel lineage and the
-    basket->pair pipeline re-executed once per consumer query execution.
-    Degrees are NOT joined onto the edge side anymore: the hop loops fold
-    DEG into the node-sized rank frame (one edge join per hop instead of
-    two, and the edge bytes shrink by a column). The universe + degree +
-    has-in-edge flags come from ONE shuffle (a union with an origin flag
-    folded by a single groupBy), replacing union-distinct + left-join +
-    three separate count jobs with one pipeline and one scalar job.
+    r0(v)      = scale div K                  (v a target, else 0)
+    r_{t+1}(v) = SUM over in-edges u->v of damping*r_t(u)*w div (100*strength(u))
+                 + [v a target] * ((100-damping)*scale div (100*K)
+                                   + damping*D_t div (100*K))
 
-    ``symmetric=True`` is the caller's contract that every edge has its
-    mirror (anything built by copurchase_edges): the universe then EQUALS
-    the out-node set, so flag detection is skipped and the fast
-    recurrence is selected directly."""
-    es, _ = _ckpt_edges(edges.select("SRC", "DST"), checkpoint)
+    computed over the FULL universe every hop (left join + coalesce), so
+    teleport-only nodes and dangling sinks keep their mass, and dangling
+    mass returns to the targets as in Page et al. 1999, section 2.7.
+
+    ``edges`` is (SRC, DST[, __w]) -- or, when ``bucketed``, the persisted
+    table with the strength baked in as DEG, so the rank frame joins the
+    edges alone; otherwise DEG rides the NODE-SIZED rank side (one node x
+    node join inside the broadcast subtree), so each hop does exactly ONE
+    edge-sized join. Fast path: when no node is dangling and every node
+    has an in-edge (any symmetric graph), the universe left-join and the
+    dangling stage degenerate away -- same integers, fewer operators.
+    ``symmetric=True`` asserts that by construction and skips detection.
+    """
+    w = F.col("__w") if weighted else F.lit(1)
     if symmetric:
-        nd = es.groupBy(F.col("SRC").alias("NODE")).agg(
-            F.count(F.lit(1)).cast("long").alias("DEG")
+        ed, nd, s = _prep(edges, checkpoint, _degree(), dst=None, bucketed=bucketed)
+        s["n_out"] = s["n_in"] = s["n"]
+    else:
+        ed, nd, s = _prep(
+            edges,
+            checkpoint,
+            [
+                F.sum("__w").cast("long").alias("DEG"),
+                F.max((F.col("__w") == 0).cast("int")).alias("__in"),
+            ],
+            src=[w.cast("long").alias("__w")],
+            dst=[F.lit(0).cast("long").alias("__w")],
+            scalars=[
+                F.sum(F.when(F.col("DEG") > 0, 1).otherwise(0)).alias("n_out"),
+                F.sum("__in").alias("n_in"),
+            ],
+            bucketed=bucketed,
         )
-        if checkpoint:
-            nd = nd.localCheckpoint(eager=False)
-        n = nd.count()  # the one bounded driver scalar of the fast path
-        return es, nd, n, n, n
-    flags = es.select(F.col("SRC").alias("NODE"), F.lit(1).alias("__o")).unionAll(
-        es.select(F.col("DST").alias("NODE"), F.lit(0).alias("__o"))
+        nd = nd.select("NODE", "DEG")
+    n, out = s["n"], "OUT_STRENGTH" if weighted else "N_NEIGHBORS"
+    is_seed = F.col("NODE").isin([int(x) for x in seeds or []])
+    k = nd.where(is_seed).count() if n and seeds is not None else n  # bounded scalar
+    if k == 0:
+        return edges.sparkSession.createDataFrame(
+            [], f"NODE long, RANK_PICOS long, {out} long"
+        )
+
+    def share(mass):  # teleport and dangling mass land on the targets only
+        return mass if seeds is None else F.when(is_seed, mass).otherwise(F.lit(0))
+
+    tele = ((100 - damping_pct) * scale) // (100 * k)
+    fast = s["n_out"] == n and s["n_in"] == n
+    dang = None if fast else nd.where(F.col("DEG") == 0).select("NODE")
+    contribution = F.expr(
+        f"({damping_pct} * R{' * __w' if weighted else ''}) div (100 * DEG)"
+    ).cast("long")
+    ranks = nd.select("NODE", share(F.lit(scale // k)).cast("long").alias("R"))
+    for _ in range(iterations):
+        contrib = _hop(
+            ed,
+            ranks if bucketed else ranks.join(nd, "NODE"),
+            n,
+            [F.col("DST").alias("NODE"), contribution.alias("__c")],
+            aggs=[F.sum("__c").cast("long").alias("__S")],
+            merge=bucketed,
+        )
+        if fast:
+            ranks = contrib.select(
+                "NODE", (F.col("__S") + share(F.lit(tele))).cast("long").alias("R")
+            )
+        else:
+            dmass = ranks.join(dang, "NODE", "left_semi").agg(
+                F.coalesce(F.sum("R"), F.lit(0)).cast("long").alias("__D")
+            )
+            redistributed = F.expr(f"({damping_pct} * __D) div (100 * {k})")
+            ranks = (
+                nd.select("NODE")
+                .join(contrib, "NODE", "left")
+                .crossJoin(F.broadcast(dmass))
+                .select(
+                    "NODE",
+                    (F.coalesce(F.col("__S"), F.lit(0)) + share(F.lit(tele) + redistributed))
+                    .cast("long")
+                    .alias("R"),
+                )
+            )
+        ranks = _cut(ranks, checkpoint)
+    return ranks.join(nd, "NODE").select(
+        "NODE", F.col("R").alias("RANK_PICOS"), F.col("DEG").alias(out)
     )
-    nd = flags.groupBy("NODE").agg(
-        F.sum("__o").cast("long").alias("DEG"),
-        F.max(1 - F.col("__o")).alias("__in"),
-    )
-    if checkpoint:
-        nd = nd.localCheckpoint(eager=False)
-    # bounded driver scalars: ONE row of three numbers, never row data
-    row = nd.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("DEG") > 0, 1).otherwise(0)).alias("n_out"),
-        F.sum("__in").alias("n_in"),
-    ).first()
-    n, n_out, n_in = int(row["n"] or 0), int(row["n_out"] or 0), int(row["n_in"] or 0)
-    return es, nd.select("NODE", "DEG"), n, n_out, n_in
 
 
 def pagerank(
@@ -378,100 +489,20 @@ def pagerank(
 
     Fast path: when the graph has no dangling node AND every node has an
     in-edge (any symmetric graph, e.g. co-purchase), the recurrence above
-    degenerates to the historical in-edge-only form -- same values, fewer
-    operators -- so the pre-existing unrolled-CTE oracles replay
-    bit-identically. Detection costs two extra edge-sized distincts;
+    degenerates to the in-edge-only form -- same values, fewer operators.
+    Detection costs one extra scalar aggregation over the node frame;
     callers whose edges are symmetric BY CONSTRUCTION (copurchase_edges
     mirrors every pair) pass ``symmetric=True`` to skip detection and
     select the fast recurrence directly -- same results, measured ~40%
     cheaper per 3-hop run. Passing it on an asymmetric graph is a
-    contract violation (nodes outside the out-node set silently drop --
-    exactly the pre-round-6 behavior).
+    contract violation (nodes outside the out-node set silently drop).
 
-    Per hop: ONE edge-side shuffle join + one keyed aggregation (+ on the
-    general path: a node-sized left join and a 1-row broadcast of the
-    dangling mass -- never edge-sized). Returns
-    (NODE, RANK_PICOS, N_NEIGHBORS) where N_NEIGHBORS is the out-degree
-    (0 for dangling nodes)."""
-    ed, nd, n, n_out, n_in = _graph_prep(edges, checkpoint, symmetric)
-    if n == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-        )
-    return _pagerank_core(
-        ed, nd, n, n_out, n_in, iterations, scale, damping_pct, checkpoint
-    )
-
-
-def _pagerank_core(
-    ed: DataFrame,
-    nd: DataFrame,
-    n: int,
-    n_out: int,
-    n_in: int,
-    iterations: int,
-    scale: int,
-    damping_pct: int,
-    checkpoint: bool,
-    merge_hint: bool = False,
-) -> DataFrame:
-    """The hop loop shared by :func:`pagerank` (checkpointed in-memory
-    edges) and :func:`pagerank_bucketed` (catalog-bucketed edges;
-    ``merge_hint`` forces SMJ so the bucketed layout is provably used --
-    each hop's executed plan has NO exchange above the edge scan).
-
-    ``ed`` may carry DEG (the bucketed table bakes it into the layout) or
-    be the bare (SRC, DST) pair stream -- in the latter case DEG rides the
-    NODE-SIZED rank side (one node x node join inside the broadcast/hash
-    subtree), so each hop does exactly ONE edge-sized join and the edge
-    bytes scanned per hop shrink by a column. Contributions are identical
-    integers either way (exact lattice; join shape cannot change them)."""
-    tele = ((100 - damping_pct) * scale) // (100 * n)
-    deg_on_edges = "DEG" in ed.columns
-    ranks = nd.select("NODE", F.lit(scale // n).cast("long").alias("R"))
-    fast = n_out == n and n_in == n
-    dang = nd.where(F.col("DEG") == 0).select("NODE") if not fast else None
-    for _ in range(iterations):
-        e = ed.hint("merge") if merge_hint else ed
-        r_src = ranks if deg_on_edges else ranks.join(nd, "NODE")
-        r = r_src if merge_hint else _node_side(r_src, n)
-        contrib = (
-            e.join(r, e["SRC"] == r["NODE"])
-            .select(
-                F.col("DST"),
-                F.expr(f"({damping_pct} * R) div (100 * DEG)").cast("long").alias("__c"),
-            )
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("__c").cast("long").alias("__S"))
-        )
-        if fast:
-            ranks = contrib.select("NODE", (F.col("__S") + F.lit(tele)).cast("long").alias("R"))
-        else:
-            dmass = (
-                ranks.join(dang, "NODE", "left_semi")
-                .agg(F.coalesce(F.sum("R"), F.lit(0)).cast("long").alias("__D"))
-            )
-            ranks = (
-                nd.select("NODE")
-                .join(contrib, "NODE", "left")
-                .crossJoin(F.broadcast(dmass))
-                .select(
-                    "NODE",
-                    (
-                        F.coalesce(F.col("__S"), F.lit(0))
-                        + F.lit(tele)
-                        + F.expr(f"({damping_pct} * __D) div (100 * {n})")
-                    )
-                    .cast("long")
-                    .alias("R"),
-                )
-            )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.join(nd, "NODE").select(
-        F.col("NODE"),
-        F.col("R").alias("RANK_PICOS"),
-        F.col("DEG").alias("N_NEIGHBORS"),
+    Per hop: ONE edge-side join + one keyed aggregation (+ on the general
+    path: a node-sized left join and a 1-row broadcast of the dangling
+    mass -- never edge-sized). Returns (NODE, RANK_PICOS, N_NEIGHBORS)
+    where N_NEIGHBORS is the out-degree (0 for dangling nodes)."""
+    return _pagerank(
+        edges.select("SRC", "DST"), iterations, scale, damping_pct, checkpoint, symmetric
     )
 
 
@@ -503,59 +534,21 @@ def pagerank_bucketed(
     """
     from ..sources.parquet_io import write_bucketed
 
-    spark = edges.sparkSession
-    # NB: deg + join + write share ONE query execution (exchange reuse
-    # covers the build); checkpointing the pair stream first was measured
-    # SLOWER at the decade point (an extra full materialization pass)
-    deg = edges.groupBy("SRC").agg(F.count(F.lit(1)).cast("long").alias("DEG"))
+    # deg + join + write share ONE query execution (exchange reuse covers
+    # the build); checkpointing the pair stream first was measured SLOWER
+    # at the decade point (an extra full materialization pass)
+    deg = edges.groupBy("SRC").agg(*_degree())
     write_bucketed(
-        edges.join(deg, "SRC"),
-        table,
-        ["SRC"],
-        num_buckets,
-        sort_cols=["SRC"],
-        path=path,
+        edges.join(deg, "SRC"), table, ["SRC"], num_buckets, sort_cols=["SRC"], path=path
     )
-    ed = spark.table(table)
-    if symmetric:  # caller contract: mirror edges -> universe == out-nodes
-        nd = ed.select(F.col("SRC").alias("NODE"), "DEG").distinct()
-        if checkpoint:
-            nd = nd.localCheckpoint(eager=False)
-        n = nd.count()
-        if n == 0:
-            return spark.createDataFrame(
-                [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-            )
-        n_out = n_in = n
-    else:
-        nodes = (
-            ed.select(F.col("SRC").alias("NODE"))
-            .unionAll(ed.select(F.col("DST").alias("NODE")))
-            .distinct()
-        )
-        nd = nodes.join(
-            ed.select("SRC", "DEG").distinct(), nodes["NODE"] == F.col("SRC"), "left"
-        ).select("NODE", F.coalesce(F.col("DEG"), F.lit(0)).cast("long").alias("DEG"))
-        if checkpoint:
-            nd = nd.localCheckpoint(eager=False)
-        n = nd.count()
-        if n == 0:
-            return spark.createDataFrame(
-                [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-            )
-        n_out = nd.where(F.col("DEG") > 0).count()
-        n_in = ed.select("DST").distinct().count()
-    return _pagerank_core(
-        ed,
-        nd,
-        n,
-        n_out,
-        n_in,
+    return _pagerank(
+        edges.sparkSession.table(table),
         iterations,
         scale,
         damping_pct,
         checkpoint,
-        merge_hint=True,
+        symmetric,
+        bucketed=True,
     )
 
 
@@ -581,74 +574,16 @@ def personalized_pagerank(
     surviving-seed count divides the teleport mass); an all-absent seed
     set returns the empty frame. Fast path as in :func:`pagerank`: on a
     symmetric graph the universe left-join and dangling stage degenerate
-    away and the historical recurrence replays bit-identically.
+    away and the in-edge-only recurrence replays bit-identically.
     """
-    ed, nd, n, n_out, n_in = _graph_prep(edges, checkpoint, symmetric)
-    if n == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-        )
-    seed_lits = [int(x) for x in seeds]
-    k = nd.where(F.col("NODE").isin(seed_lits)).count()  # bounded scalar
-    if k == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-        )
-    tele_seed = ((100 - damping_pct) * scale) // (100 * k)
-    is_seed = F.col("NODE").isin(seed_lits)
-    fast = n_out == n and n_in == n
-    dang = nd.where(F.col("DEG") == 0).select("NODE") if not fast else None
-    ranks = nd.select(
-        "NODE",
-        F.when(is_seed, F.lit(scale // k)).otherwise(F.lit(0)).cast("long").alias("R"),
-    )
-    for _ in range(iterations):
-        # DEG rides the node-sized side (see _pagerank_core): one edge
-        # join per hop over the bare (SRC, DST) checkpoint
-        r = _node_side(ranks.join(nd, "NODE"), n)
-        contrib = (
-            ed.join(r, ed["SRC"] == r["NODE"])
-            .select(
-                F.col("DST"),
-                F.expr(f"({damping_pct} * R) div (100 * DEG)").cast("long").alias("__c"),
-            )
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("__c").cast("long").alias("__S"))
-        )
-        if fast:
-            ranks = contrib.select(
-                "NODE",
-                (F.col("__S") + F.when(is_seed, F.lit(tele_seed)).otherwise(F.lit(0)))
-                .cast("long")
-                .alias("R"),
-            )
-        else:
-            dmass = (
-                ranks.join(dang, "NODE", "left_semi")
-                .agg(F.coalesce(F.sum("R"), F.lit(0)).cast("long").alias("__D"))
-            )
-            ranks = (
-                nd.select("NODE")
-                .join(contrib, "NODE", "left")
-                .crossJoin(F.broadcast(dmass))
-                .select(
-                    "NODE",
-                    (
-                        F.coalesce(F.col("__S"), F.lit(0))
-                        + F.when(
-                            is_seed,
-                            F.lit(tele_seed)
-                            + F.expr(f"({damping_pct} * __D) div (100 * {k})"),
-                        ).otherwise(F.lit(0))
-                    )
-                    .cast("long")
-                    .alias("R"),
-                )
-            )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.join(nd, "NODE").select(
-        F.col("NODE"), F.col("R").alias("RANK_PICOS"), F.col("DEG").alias("N_NEIGHBORS")
+    return _pagerank(
+        edges.select("SRC", "DST"),
+        iterations,
+        scale,
+        damping_pct,
+        checkpoint,
+        symmetric,
+        seeds=seeds,
     )
 
 
@@ -668,48 +603,33 @@ def label_propagation(
     QUALIFY row_number), unlike the asynchronous/random-order LPA in the
     literature, which is deliberately traded away for gradeability.
 
-    Per round: ONE edge-sized shuffle join (labels onto SRC), one
-    (DST, label) count aggregation -- partial-aggregated map-side, so the
-    shuffle after it carries at most (node x distinct-neighbor-label)
-    rows -- and a node-keyed top-1 window over that bounded frame. The
-    node universe rides a left join + coalesce, so isolated-side nodes
-    never vanish (the round-6 pagerank discipline). Lineage is cut per
-    round with localCheckpoint. Returns (NODE, COMMUNITY).
+    Per round: ONE edge-sized join (labels onto SRC), one (DST, label)
+    count aggregation -- partial-aggregated map-side, so the shuffle
+    after it carries at most (node x distinct-neighbor-label) rows -- and
+    a node-keyed top-1 window over that bounded frame. The node universe
+    rides a left join + coalesce, so isolated-side nodes never vanish.
+    Lineage is cut per round. Returns (NODE, COMMUNITY).
     """
-    # edges first (_ckpt_edges: one materialization + width policy), then
-    # the node universe FROM the checkpoint -- the old parallel-lineage
-    # shape re-executed the edge build once per consumer query execution
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    nodes = (
-        ed.select(F.col("SRC").alias("NODE"))
-        .unionAll(ed.select(F.col("DST").alias("NODE")))
-        .distinct()
-    )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=False)
-    labels = nodes.select("NODE", F.col("NODE").alias("L"))
-    n = nodes.count()  # bounded driver scalar: sizes the hop-join policy
-    from pyspark.sql import Window
-
+    ed, labels, s = _prep(edges.select("SRC", "DST").distinct(), checkpoint)
+    labels = labels.select("NODE", F.col("NODE").alias("L"))
+    w = Window.partitionBy("NODE").orderBy(F.col("__n").desc(), F.col("L"))
     for _ in range(iterations):
-        lb = _node_side(labels, n)
         counts = (
-            ed.join(lb, ed["SRC"] == lb["NODE"])
-            .groupBy(F.col("DST").alias("NODE"), F.col("L"))
+            _hop(ed, labels, s["n"], [F.col("DST").alias("NODE"), "L"])
+            .groupBy("NODE", "L")
             .agg(F.count(F.lit(1)).cast("long").alias("__n"))
         )
-        w = Window.partitionBy("NODE").orderBy(F.col("__n").desc(), F.col("L"))
         best = (
             counts.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .select("NODE", F.col("L").alias("__best"))
         )
-        labels = (
-            labels.join(best, "NODE", "left")
-            .select("NODE", F.coalesce(F.col("__best"), F.col("L")).alias("L"))
+        labels = _cut(
+            labels.join(best, "NODE", "left").select(
+                "NODE", F.coalesce(F.col("__best"), F.col("L")).alias("L")
+            ),
+            checkpoint,
         )
-        if checkpoint:
-            labels = labels.localCheckpoint(eager=False)
     return labels.select("NODE", F.col("L").alias("COMMUNITY"))
 
 
@@ -733,10 +653,10 @@ def hits(
     universe via left join + coalesce, so pure hubs keep authority 0 and
     pure authorities keep hub 0 instead of vanishing.
 
-    Per half-step: ONE edge-sized shuffle join + one keyed aggregation
+    Per half-step: ONE edge-sized join + one keyed aggregation
     (partial-aggregated map-side), a node-sized left join, and a 1-row
     broadcast of the global mass -- no driver state beyond the node count.
-    Lineage is cut per half-step with localCheckpoint.
+    Lineage is cut per half-step.
 
     Overflow bound: every post-normalization score is <= scale, so a
     node's pooled mass is <= scale and pooled * scale <= 1e18 < 2^63 at
@@ -746,22 +666,37 @@ def hits(
     init floors to zero.
 
     Returns (NODE, AUTH_NANOS, HUB_NANOS, IN_DEGREE, OUT_DEGREE)."""
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    # universe + BOTH degrees from ONE shuffle over the checkpoint (the
-    # _graph_prep flags pattern): the old shape paid a union-distinct for
-    # nodes plus two fresh edge-sized degree aggregations at the end
-    flags = ed.select(F.col("SRC").alias("NODE"), F.lit(1).alias("__o")).unionAll(
-        ed.select(F.col("DST").alias("NODE"), F.lit(0).alias("__o"))
+    return _hits(edges.select("SRC", "DST").distinct(), None, iterations, scale, checkpoint)
+
+
+def _hits(
+    by_src: DataFrame,
+    by_dst: DataFrame | None,
+    iterations: int,
+    scale: int,
+    checkpoint: bool,
+) -> DataFrame:
+    """The half-step loop of :func:`hits` (``by_dst`` None: one in-memory
+    edge frame serves both joins) and :func:`hits_bucketed` (``by_src``
+    bucketed on SRC for the hub-pooling join, ``by_dst`` bucketed on DST
+    for the auth-pooling join, each joined by sort-merge with no exchange
+    above its co-located edge scan). Universe and both degrees come from
+    one ``_prep`` shuffle over ``by_src``."""
+    bucketed = by_dst is not None
+    ed, nodes, s = _prep(
+        by_src,
+        checkpoint,
+        [
+            F.sum("__o").cast("long").alias("OUT_DEGREE"),
+            F.sum(1 - F.col("__o")).cast("long").alias("IN_DEGREE"),
+        ],
+        src=[F.lit(1).alias("__o")],
+        dst=[F.lit(0).alias("__o")],
+        bucketed=bucketed,
     )
-    nodes = flags.groupBy("NODE").agg(
-        F.sum("__o").cast("long").alias("OUT_DEGREE"),
-        F.sum(1 - F.col("__o")).cast("long").alias("IN_DEGREE"),
-    )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=False)
-    n = nodes.count()  # the one bounded driver scalar
+    n = s["n"]
     if n == 0:
-        return edges.sparkSession.createDataFrame(
+        return ed.sparkSession.createDataFrame(
             [], "NODE long, AUTH_NANOS long, HUB_NANOS long, IN_DEGREE long, OUT_DEGREE long"
         )
     if scale <= n:
@@ -769,69 +704,35 @@ def hits(
         # the uniform init to 0, making the first half-step total 0 and
         # silently NULLing every score through `div __T`
         raise ValueError(f"scale ({scale}) must exceed the node count ({n})")
-    return _hits_core(ed, ed, nodes, n, iterations, scale, checkpoint)
 
+    def half(edges, frame, score, on, to, pooled):
+        """Pool ``frame``'s ``score`` over ``on`` -> ``to`` edges and
+        rescale the pooled mass to ``scale`` over the full universe."""
+        mass = _hop(
+            edges,
+            frame,
+            n,
+            [F.col(to).alias("NODE"), score],
+            on=on,
+            aggs=[F.sum(score).cast("long").alias("__S")],
+            merge=bucketed,
+        )
+        total = mass.agg(F.sum("__S").cast("long").alias("__T"))
+        return _cut(
+            nodes.join(mass, "NODE", "left")
+            .crossJoin(F.broadcast(total))
+            .select(
+                "NODE",
+                F.expr(f"(coalesce(__S, 0L) * {scale}) div __T").cast("long").alias(pooled),
+            ),
+            checkpoint,
+        )
 
-def _hits_core(
-    ed_src: DataFrame,
-    ed_dst: DataFrame,
-    nodes: DataFrame,
-    n: int,
-    iterations: int,
-    scale: int,
-    checkpoint: bool,
-    merge_hint: bool = False,
-) -> DataFrame:
-    """The half-step loop shared by :func:`hits` (one in-memory edge
-    frame for both joins) and :func:`hits_bucketed` (``ed_src`` bucketed
-    on SRC for the hub-pooling join, ``ed_dst`` bucketed on DST for the
-    auth-pooling join; ``merge_hint`` forces SMJ so each half-step's
-    executed plan has NO exchange above its co-located edge scan).
-
-    ``nodes`` carries (NODE, IN_DEGREE, OUT_DEGREE) -- both callers
-    compute degrees in their prep (plain hits folds them into the same
-    single shuffle that builds the universe; the bucketed twin keeps its
-    exchange-free per-copy aggregations), so the final select is one
-    node-sized join instead of two fresh edge-sized degree shuffles."""
     hubs = nodes.select("NODE", F.lit(scale // n).cast("long").alias("H"))
     auth = nodes.select("NODE", F.lit(scale // n).cast("long").alias("A"))
-    es = ed_src.hint("merge") if merge_hint else ed_src
-    ed = ed_dst.hint("merge") if merge_hint else ed_dst
     for _ in range(iterations):
-        hb = hubs if merge_hint else _node_side(hubs, n)
-        ap = (
-            es.join(hb, es["SRC"] == hb["NODE"])
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("H").cast("long").alias("__S"))
-        )
-        at = ap.agg(F.sum("__S").cast("long").alias("__T"))
-        auth = (
-            nodes.join(ap, "NODE", "left")
-            .crossJoin(F.broadcast(at))
-            .select(
-                "NODE",
-                F.expr(f"(coalesce(__S, 0L) * {scale}) div __T").cast("long").alias("A"),
-            )
-        )
-        if checkpoint:
-            auth = auth.localCheckpoint(eager=False)
-        au = auth if merge_hint else _node_side(auth, n)
-        hp = (
-            ed.join(au, ed["DST"] == au["NODE"])
-            .groupBy(F.col("SRC").alias("NODE"))
-            .agg(F.sum("A").cast("long").alias("__S"))
-        )
-        ht = hp.agg(F.sum("__S").cast("long").alias("__T"))
-        hubs = (
-            nodes.join(hp, "NODE", "left")
-            .crossJoin(F.broadcast(ht))
-            .select(
-                "NODE",
-                F.expr(f"(coalesce(__S, 0L) * {scale}) div __T").cast("long").alias("H"),
-            )
-        )
-        if checkpoint:
-            hubs = hubs.localCheckpoint(eager=False)
+        auth = half(ed, hubs, "H", "SRC", "DST", "A")
+        hubs = half(by_dst if bucketed else ed, auth, "A", "DST", "SRC", "H")
     return (
         auth.join(hubs, "NODE")
         .join(nodes, "NODE")
@@ -839,8 +740,8 @@ def _hits_core(
             "NODE",
             F.col("A").alias("AUTH_NANOS"),
             F.col("H").alias("HUB_NANOS"),
-            F.coalesce(F.col("IN_DEGREE"), F.lit(0)).cast("long").alias("IN_DEGREE"),
-            F.coalesce(F.col("OUT_DEGREE"), F.lit(0)).cast("long").alias("OUT_DEGREE"),
+            "IN_DEGREE",
+            "OUT_DEGREE",
         )
     )
 
@@ -862,51 +763,26 @@ def hits_bucketed(
     sorted on SRC, ``{table}_dst`` on DST -- and each half-step
     sort-merge-joins the node-sized score frame against its co-located
     copy with ZERO exchange above the edge scan (plan-pinned in
-    test_graph); the degree aggregations group on their copy's bucket key
-    and are exchange-free too. 2x the ingest write and storage buys an
-    iterative workload in which no edge byte ever re-shuffles. Results
-    are bit-identical to :func:`hits` (same lattice trajectory,
-    layout-only change)."""
+    test_graph). 2x the ingest write and storage buys an iterative
+    workload in which no edge byte ever re-shuffles. Results are
+    bit-identical to :func:`hits` (same lattice trajectory, layout-only
+    change)."""
     from ..sources.parquet_io import write_bucketed
 
     spark = edges.sparkSession
-    # one materialization feeds BOTH bucketed writes (the old shape ran
-    # the distinct once per write), at measured-row width
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), True)
-    write_bucketed(ed, f"{table}_src", ["SRC"], num_buckets, sort_cols=["SRC"],
-                   path=os.path.join(path, "src") if path else None)
-    write_bucketed(ed, f"{table}_dst", ["DST"], num_buckets, sort_cols=["DST"],
-                   path=os.path.join(path, "dst") if path else None)
-    ed_src, ed_dst = spark.table(f"{table}_src"), spark.table(f"{table}_dst")
-    # each degree agg groups on its copy's bucket key (exchange-free
-    # map-side aggregation); the full join assembles the universe with
-    # both degrees, replacing the old union-distinct plus the two fresh
-    # edge-sized degree shuffles the final select used to pay
-    outdeg = ed_src.groupBy(F.col("SRC").alias("NODE")).agg(
-        F.count(F.lit(1)).cast("long").alias("OUT_DEGREE")
-    )
-    indeg = ed_dst.groupBy(F.col("DST").alias("NODE")).agg(
-        F.count(F.lit(1)).cast("long").alias("IN_DEGREE")
-    )
-    nodes = (
-        outdeg.join(indeg, "NODE", "full")
-        .select(
-            "NODE",
-            F.coalesce(F.col("OUT_DEGREE"), F.lit(0)).cast("long").alias("OUT_DEGREE"),
-            F.coalesce(F.col("IN_DEGREE"), F.lit(0)).cast("long").alias("IN_DEGREE"),
+    # one materialization feeds BOTH bucketed writes, at measured-row width
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
+    for key in ("SRC", "DST"):
+        write_bucketed(
+            ed,
+            f"{table}_{key.lower()}",
+            [key],
+            num_buckets,
+            sort_cols=[key],
+            path=os.path.join(path, key.lower()) if path else None,
         )
-    )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=False)
-    n = nodes.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "NODE long, AUTH_NANOS long, HUB_NANOS long, IN_DEGREE long, OUT_DEGREE long"
-        )
-    if scale <= n:
-        raise ValueError(f"scale ({scale}) must exceed the node count ({n})")
-    return _hits_core(
-        ed_src, ed_dst, nodes, n, iterations, scale, checkpoint, merge_hint=True
+    return _hits(
+        spark.table(f"{table}_src"), spark.table(f"{table}_dst"), iterations, scale, checkpoint
     )
 
 
@@ -943,26 +819,14 @@ def common_neighbor_link_prediction(
     NODE_A < NODE_B."""
     if min_common < 1:
         raise ValueError(f"min_common must be >= 1, got {min_common}")
-    und, _ = _ckpt_edges(
-        edges.select(
-            F.least("SRC", "DST").alias("A"), F.greatest("SRC", "DST").alias("B")
-        )
-        .where(F.col("A") != F.col("B"))
-        .distinct(),
-        checkpoint,
+    und, deg, s = _prep(_undirected(edges), checkpoint, _degree(), ends=("A", "B"))
+    n = s["n"]
+    mid = und.select(F.col("B").alias("M"), F.col("A").alias("N")).unionAll(
+        und.select(F.col("A").alias("M"), F.col("B").alias("N"))
     )
-    nbr = und.select(F.col("A").alias("N"), F.col("B").alias("M")).unionAll(
-        und.select(F.col("B").alias("N"), F.col("A").alias("M"))
-    )
-    deg = nbr.groupBy("N").agg(F.count(F.lit(1)).cast("long").alias("DEG"))
-    if checkpoint:
-        deg = deg.localCheckpoint(eager=False)
-    n_nodes = deg.count()  # bounded driver scalar: sizes the join policy
-    mid = nbr.select(F.col("M"), F.col("N"))
     if max_middle_degree is not None:
-        mdeg = deg.select(F.col("N").alias("M"), F.col("DEG").alias("__MD"))
         mid = (
-            mid.join(_node_side(mdeg, n_nodes), "M")
+            _hop(mid, deg.select("NODE", F.col("DEG").alias("__MD")), n, ["M", "N", "__MD"], on="M")
             .where(F.col("__MD") <= max_middle_degree)
             .select("M", "N")
         )
@@ -985,46 +849,44 @@ def common_neighbor_link_prediction(
                 ).alias("__p")
             )
             .select("__p.NODE_A", "__p.NODE_B")
-            .groupBy("NODE_A", "NODE_B")
-            .agg(F.count(F.lit(1)).cast("long").alias("N_COMMON"))
-            .where(F.col("N_COMMON") >= min_common)
         )
     else:
         # uncapped graphs keep the self-join: a hub middle's collected
         # adjacency array would be unbounded per row, the exact hazard
         # max_middle_degree exists to control. (Width inherits from the
-        # widened und checkpoint through the narrow union/filter chain.)
-        if checkpoint:
-            mid = _ckpt_big(mid)
-        w1 = mid.select("M", F.col("N").alias("NODE_A"))
-        w2 = mid.select("M", F.col("N").alias("NODE_B"))
+        # widened und checkpoint through the narrow union chain.)
+        mid = _cut(mid, checkpoint, big=True)
         common = (
-            w1.join(w2, "M")
+            mid.select("M", F.col("N").alias("NODE_A"))
+            .join(mid.select("M", F.col("N").alias("NODE_B")), "M")
             .where(F.col("NODE_A") < F.col("NODE_B"))
-            .groupBy("NODE_A", "NODE_B")
-            .agg(F.count(F.lit(1)).cast("long").alias("N_COMMON"))
-            .where(F.col("N_COMMON") >= min_common)
         )
-    cand = common.join(
-        und.select(F.col("A").alias("NODE_A"), F.col("B").alias("NODE_B")),
-        ["NODE_A", "NODE_B"],
-        "left_anti",
+    cand = (
+        common.groupBy("NODE_A", "NODE_B")
+        .agg(F.count(F.lit(1)).cast("long").alias("N_COMMON"))
+        .where(F.col("N_COMMON") >= min_common)
+        .join(
+            und.select(F.col("A").alias("NODE_A"), F.col("B").alias("NODE_B")),
+            ["NODE_A", "NODE_B"],
+            "left_anti",
+        )
     )
-    da = deg.select(F.col("N").alias("NODE_A"), F.col("DEG").alias("DEG_A"))
-    db = deg.select(F.col("N").alias("NODE_B"), F.col("DEG").alias("DEG_B"))
-    return (
-        cand.join(_node_side(da, n_nodes), "NODE_A")
-        .join(_node_side(db, n_nodes), "NODE_B")
-        .select(
-            "NODE_A",
-            "NODE_B",
-            "N_COMMON",
+    pair = ["NODE_A", "NODE_B", "N_COMMON"]
+    da = deg.select("NODE", F.col("DEG").alias("DEG_A"))
+    cand = _hop(cand, da, n, pair + ["DEG_A"], on="NODE_A")
+    return _hop(
+        cand,
+        deg.select("NODE", F.col("DEG").alias("DEG_B")),
+        n,
+        pair
+        + [
             "DEG_A",
             "DEG_B",
             F.expr("(1000000 * N_COMMON) div (DEG_A + DEG_B - N_COMMON)")
             .cast("long")
             .alias("JACCARD_PPM"),
-        )
+        ],
+        on="NODE_B",
     )
 
 
@@ -1053,80 +915,58 @@ def katz_centrality(
     high even if those walkers also point elsewhere -- the influence form
     of the walk.
 
-    Overflow guard (ADVICE r7: the old ``alpha_ppm * max_in_degree < 1e6``
+    Overflow guard (ADVICE r7: an ``alpha_ppm * max_in_degree < 1e6``
     spectral-radius bound is an INFINITE-series condition -- the truncated
-    T-hop sum is finite for any alpha, and in-degree grows with data scale,
-    so the old guard hard-failed exact, representable results): the guard
-    now replays the worst-case accumulator exactly on driver integers --
-    ``X_{t+1} = max_in_degree * ((alpha_ppm * (scale + X_t)) div 1e6)`` --
-    and raises only if a per-edge product or a per-node sum could actually
-    exceed BIGINT within the requested ``iterations``. Per hop: ONE
-    edge-sized shuffle join + one keyed aggregation + a node-sized left
-    join, lineage cut per hop with localCheckpoint.
+    T-hop sum is finite for any alpha, and in-degree grows with data
+    scale, so that bound would hard-fail exact, representable results):
+    the guard replays the worst-case accumulator exactly on driver
+    integers -- ``X_{t+1} = max_in_degree * ((alpha_ppm * (scale + X_t))
+    div 1e6)`` -- and raises only if a per-edge product or a per-node sum
+    could actually exceed BIGINT within the requested ``iterations``. Per
+    hop: ONE edge-sized join + one keyed aggregation + a node-sized left
+    join, lineage cut per hop.
 
     Returns (NODE, KATZ_NANOS, IN_DEGREE)."""
     if not 0 < alpha_ppm < 10**6:
         raise ValueError(f"alpha_ppm must be in (0, 1e6), got {alpha_ppm}")
-    # edges first (_ckpt_edges), then universe + in-degree from ONE
-    # shuffle over the checkpoint (the _graph_prep flags pattern); n and
-    # max_in ride a single scalar job over the node frame
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    flags = ed.select(F.col("SRC").alias("NODE"), F.lit(0).alias("__i")).unionAll(
-        ed.select(F.col("DST").alias("NODE"), F.lit(1).alias("__i"))
+    ed, nodes, s = _prep(
+        edges.select("SRC", "DST").distinct(),
+        checkpoint,
+        [F.sum("__i").cast("long").alias("IN_DEGREE")],
+        src=[F.lit(0).alias("__i")],
+        dst=[F.lit(1).alias("__i")],
+        scalars=[F.max("IN_DEGREE").alias("max_in")],
     )
-    nodes = flags.groupBy("NODE").agg(
-        F.sum("__i").cast("long").alias("IN_DEGREE")
-    )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=False)
-    srow = nodes.agg(
-        F.count(F.lit(1)).alias("n"), F.max("IN_DEGREE").alias("m")
-    ).first()
-    n = int(srow["n"] or 0)
-    max_in = int(srow["m"] or 0)  # bounded driver scalar
-    # exact worst-case replay of the lattice recurrence on driver ints:
-    # every node's X is bounded by X_{t+1} = max_in * ((alpha_ppm *
-    # (scale + X_t)) div 1e6); raise only if the per-edge product or the
-    # per-node sum could actually leave BIGINT within `iterations`
     worst = 0
     for hop in range(1, iterations + 1):
         per_edge_product = alpha_ppm * (scale + worst)
-        worst = max_in * (per_edge_product // 10**6)
+        worst = s["max_in"] * (per_edge_product // 10**6)
         if per_edge_product >= 2**63 or worst >= 2**63:
             raise ValueError(
                 f"katz_centrality would overflow BIGINT at hop {hop}: "
                 f"worst-case accumulator {worst} (alpha_ppm={alpha_ppm}, "
-                f"max_in_degree={max_in}, scale={scale}) -- lower "
+                f"max_in_degree={s['max_in']}, scale={scale}) -- lower "
                 "alpha_ppm, scale, or iterations"
             )
     x = nodes.select("NODE", F.lit(0).cast("long").alias("X"))
     for _ in range(iterations):
-        xs = _node_side(x, n)
-        contrib = (
-            ed.join(xs, ed["SRC"] == xs["NODE"])
-            .select(
-                F.col("DST"),
-                F.expr(f"({alpha_ppm} * ({scale} + X)) div 1000000")
-                .cast("long")
-                .alias("__c"),
-            )
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("__c").cast("long").alias("__S"))
+        contrib = _hop(
+            ed,
+            x,
+            s["n"],
+            [
+                F.col("DST").alias("NODE"),
+                F.expr(f"({alpha_ppm} * ({scale} + X)) div 1000000").cast("long").alias("__c"),
+            ],
+            aggs=[F.sum("__c").cast("long").alias("__S")],
         )
-        x = (
-            nodes.join(contrib, "NODE", "left")
-            .select("NODE", F.coalesce(F.col("__S"), F.lit(0)).cast("long").alias("X"))
+        x = _cut(
+            nodes.join(contrib, "NODE", "left").select(
+                "NODE", F.coalesce(F.col("__S"), F.lit(0)).cast("long").alias("X")
+            ),
+            checkpoint,
         )
-        if checkpoint:
-            x = x.localCheckpoint(eager=False)
-    return (
-        x.join(nodes, "NODE", "left")
-        .select(
-            "NODE",
-            F.col("X").alias("KATZ_NANOS"),
-            F.coalesce(F.col("IN_DEGREE"), F.lit(0)).cast("long").alias("IN_DEGREE"),
-        )
-    )
+    return x.join(nodes, "NODE").select("NODE", F.col("X").alias("KATZ_NANOS"), "IN_DEGREE")
 
 
 def bfs_hops(
@@ -1147,9 +987,9 @@ def bfs_hops(
     so every node enters the frontier at most once and total join work
     across all rounds is bounded by one traversal of each edge from its
     first-reached source side. Frontier and visited sets are node-sized;
-    lineage is cut per round with localCheckpoint; the only driver signal
-    is the per-round empty check (a bounded scalar) that stops early once
-    the reachable set is exhausted.
+    lineage is cut per round; the only driver signal is the per-round
+    frontier count (a bounded scalar) that sizes the next join and stops
+    early once the reachable set is exhausted.
 
     Sources are taken literally: a source absent from the edge set is
     still reported at HOPS 0 (the caller asked about it), matching the
@@ -1159,32 +999,26 @@ def bfs_hops(
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     if not sources:
         raise ValueError("sources must be non-empty")
-    spark = edges.sparkSession
-    seeds = spark.createDataFrame(
-        [(int(s),) for s in sorted(set(sources))], "NODE long"
+    visited = edges.sparkSession.createDataFrame(
+        [(int(s), 0) for s in sorted(set(sources))], "NODE long, HOPS long"
     )
-    visited = seeds.select("NODE", F.lit(0).cast("long").alias("HOPS"))
     frontier = visited.select("NODE")
     ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    fsize = len(set(sources))  # frontier cardinality, tracked per round
+    size = len(set(sources))
     for h in range(1, max_hops + 1):
-        fr = _node_side(frontier, fsize)
-        nxt = (
-            ed.join(fr, ed["SRC"] == fr["NODE"])
-            .select(F.col("DST").alias("NODE"))
+        nxt = _cut(
+            _hop(ed, frontier, size, [F.col("DST").alias("NODE")])
             .distinct()
-            .join(visited, "NODE", "left_anti")
+            .join(visited, "NODE", "left_anti"),
+            checkpoint,
         )
-        if checkpoint:
-            nxt = nxt.localCheckpoint(eager=False)
-        fsize = nxt.count()  # the old isEmpty scalar, now reused to size
-        if fsize == 0:       # the next round's frontier-join policy
+        size = nxt.count()
+        if size == 0:
             break
-        visited = visited.unionByName(
-            nxt.select("NODE", F.lit(h).cast("long").alias("HOPS"))
+        visited = _cut(
+            visited.unionByName(nxt.select("NODE", F.lit(h).cast("long").alias("HOPS"))),
+            checkpoint,
         )
-        if checkpoint:
-            visited = visited.localCheckpoint(eager=False)
         frontier = nxt
     return visited
 
@@ -1203,7 +1037,7 @@ def pagerank_weighted(
     sum of u's out-weights) -- the co-purchase-count / click-count /
     citation-frequency form of the walk, where a 10x-heavier edge carries
     10x the mass. Same exact-lattice discipline as :func:`pagerank`
-    (BIGINT picos, floor division, localCheckpoint per hop) and the same
+    (BIGINT picos, floor division, a lineage cut per hop) and the same
     universe recurrence: ranks live on the full node set via left join +
     coalesce, dangling (zero-strength) nodes redistribute uniformly via a
     1-row broadcast. With all weights equal it reduces exactly to
@@ -1212,31 +1046,20 @@ def pagerank_weighted(
     Weights must be positive integers -- rows with a non-positive or NULL
     weight are dropped before anything else (a zero/negative weight makes
     strength semantics undefined); parallel edges are summed into one
-    weighted edge first. Per hop: ONE edge-sized shuffle join +
-    one keyed aggregation, exactly the unweighted cost -- the weight is a
-    column, not extra rows. Overflow: r * w <= scale * total-weight must
-    stay under 2^63; at the default picos scale that bounds per-edge
-    weights to ~9e6 -- rescale weights (only ratios matter) beyond that.
+    weighted edge first. Per hop: ONE edge-sized join + one keyed
+    aggregation, exactly the unweighted cost -- the weight is a column,
+    not extra rows. Overflow: r * w <= scale * total-weight must stay
+    under 2^63; at the default picos scale that bounds per-edge weights
+    to ~9e6 -- rescale weights (only ratios matter) beyond that.
 
     Returns (NODE, RANK_PICOS, OUT_STRENGTH)."""
-    # weighted edges first (_ckpt_edges: one materialization + width
-    # policy); the node universe WITH out-strength comes from ONE shuffle
-    # over the checkpoint (SRC arm carries __w, DST arm carries 0, so
-    # sum(__w) per NODE is exactly the out-strength -- 0 for dangling)
-    ew, _ = _ckpt_edges(_weighted_edges(edges, weight_col), checkpoint)
-    flags = ew.select(F.col("SRC").alias("NODE"), F.col("__w")).unionAll(
-        ew.select(F.col("DST").alias("NODE"), F.lit(0).cast("long").alias("__w"))
-    )
-    nd = flags.groupBy("NODE").agg(F.sum("__w").cast("long").alias("__S"))
-    if checkpoint:
-        nd = nd.localCheckpoint(eager=False)
-    n = nd.count()
-    if n == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "NODE long, RANK_PICOS long, OUT_STRENGTH long"
-        )
-    return _pagerank_weighted_core(
-        ew, nd, n, iterations, scale, damping_pct, checkpoint
+    return _pagerank(
+        _weighted_edges(edges, weight_col),
+        iterations,
+        scale,
+        damping_pct,
+        checkpoint,
+        weighted=True,
     )
 
 
@@ -1247,70 +1070,6 @@ def _weighted_edges(edges: DataFrame, weight_col: str) -> DataFrame:
         .where(F.col("__w") > 0)
         .groupBy("SRC", "DST")
         .agg(F.sum("__w").cast("long").alias("__w"))
-    )
-
-
-def _pagerank_weighted_core(
-    ed: DataFrame,
-    nd: DataFrame,
-    n: int,
-    iterations: int,
-    scale: int,
-    damping_pct: int,
-    checkpoint: bool,
-    merge_hint: bool = False,
-) -> DataFrame:
-    """The weighted hop loop shared by :func:`pagerank_weighted`
-    (checkpointed in-memory edges) and :func:`pagerank_weighted_bucketed`
-    (catalog-bucketed edges; ``merge_hint`` forces SMJ so each hop's
-    executed plan has NO exchange above the bucketed edge scan -- the
-    same discipline as :func:`_pagerank_core`). ``ed`` carries
-    (SRC, DST, __w) -- plus __S when the bucketed table bakes strength
-    into the layout; otherwise __S rides the node-sized rank side (one
-    edge join per hop, see :func:`_pagerank_core`); ``nd`` carries
-    (NODE, __S)."""
-    tele = ((100 - damping_pct) * scale) // (100 * n)
-    strength_on_edges = "__S" in ed.columns
-    dang = nd.where(F.col("__S") == 0).select("NODE")
-    ranks = nd.select("NODE", F.lit(scale // n).cast("long").alias("R"))
-    for _ in range(iterations):
-        e = ed.hint("merge") if merge_hint else ed
-        r_src = ranks if strength_on_edges else ranks.join(nd, "NODE")
-        r = r_src if merge_hint else _node_side(r_src, n)
-        contrib = (
-            e.join(r, e["SRC"] == r["NODE"])
-            .select(
-                F.col("DST"),
-                F.expr(f"({damping_pct} * R * __w) div (100 * __S)")
-                .cast("long")
-                .alias("__c"),
-            )
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("__c").cast("long").alias("__C"))
-        )
-        dmass = (
-            ranks.join(dang, "NODE", "left_semi")
-            .agg(F.coalesce(F.sum("R"), F.lit(0)).cast("long").alias("__D"))
-        )
-        ranks = (
-            nd.select("NODE")
-            .join(contrib, "NODE", "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
-                "NODE",
-                (
-                    F.coalesce(F.col("__C"), F.lit(0))
-                    + F.lit(tele)
-                    + F.expr(f"({damping_pct} * __D) div (100 * {n})")
-                )
-                .cast("long")
-                .alias("R"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.join(nd, "NODE").select(
-        "NODE", F.col("R").alias("RANK_PICOS"), F.col("__S").alias("OUT_STRENGTH")
     )
 
 
@@ -1339,45 +1098,28 @@ def pagerank_weighted_bucketed(
     recurrence, layout-only change; pinned in test_graph)."""
     from ..sources.parquet_io import write_bucketed
 
-    spark = edges.sparkSession
     # strength + join + write share ONE query execution (see
     # pagerank_bucketed: a pre-write checkpoint measured slower)
     ew = _weighted_edges(edges, weight_col)
-    st = ew.groupBy("SRC").agg(F.sum("__w").cast("long").alias("__S"))
-    # persist with catalog-friendly names; re-alias to the core's contract
+    st = ew.groupBy("SRC").agg(F.sum("__w").cast("long").alias("S"))
     write_bucketed(
-        ew.join(st, "SRC").select(
-            "SRC", "DST", F.col("__w").alias("W"), F.col("__S").alias("S")
-        ),
+        ew.join(st, "SRC").select("SRC", "DST", F.col("__w").alias("W"), "S"),
         table,
         ["SRC"],
         num_buckets,
         sort_cols=["SRC"],
         path=path,
     )
-    ed = spark.table(table).select(
-        "SRC", "DST", F.col("W").alias("__w"), F.col("S").alias("__S")
-    )
-    # derive the node universe from the BUCKETED table too (one cheap
-    # scan; strengths ride the persisted column, no recompute of ew)
-    st_b = ed.select("SRC", "__S").distinct()
-    nodes = (
-        ed.select(F.col("SRC").alias("NODE"))
-        .unionAll(ed.select(F.col("DST").alias("NODE")))
-        .distinct()
-    )
-    nd = nodes.join(st_b, nodes["NODE"] == st_b["SRC"], "left").select(
-        "NODE", F.coalesce(F.col("__S"), F.lit(0)).cast("long").alias("__S")
-    )
-    if checkpoint:
-        nd = nd.localCheckpoint(eager=False)
-    n = nd.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "NODE long, RANK_PICOS long, OUT_STRENGTH long"
-        )
-    return _pagerank_weighted_core(
-        ed, nd, n, iterations, scale, damping_pct, checkpoint, merge_hint=True
+    return _pagerank(
+        edges.sparkSession.table(table).select(
+            "SRC", "DST", F.col("W").alias("__w"), F.col("S").alias("DEG")
+        ),
+        iterations,
+        scale,
+        damping_pct,
+        checkpoint,
+        weighted=True,
+        bucketed=True,
     )
 
 
@@ -1402,7 +1144,7 @@ def sssp_hops(
     |edges| + |dist|. Unlike BFS, a node can re-enter with a CHEAPER
     cost, so rounds relax the whole map, not a frontier; after round t
     the map is exact for every path of <= t hops (the Bellman-Ford
-    invariant). Lineage is cut per round with localCheckpoint.
+    invariant). Lineage is cut per round.
 
     Negative weights are rejected: hop-bounded relaxation is still
     well-defined with them, but a negative-cycle graph has no finite
@@ -1414,47 +1156,34 @@ def sssp_hops(
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     if not sources:
         raise ValueError("sources must be non-empty")
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
+    dist = edges.sparkSession.createDataFrame(
         [(int(s), 0) for s in sorted(set(sources))], "NODE long, DIST long"
     )
-    # checkpoint FIRST, validate against the blocks: the old order ran the
-    # edge build once for the negative-weight probe and again for the
-    # checkpoint materialization (exchange reuse does not cross query
-    # executions)
-    ed, e_cnt = _ckpt_edges(
+    # checkpoint FIRST, validate against the blocks: the edge build runs
+    # once for both the negative-weight probe and the hops
+    ed, n_edges = _ckpt_edges(
         edges.select(F.col("SRC"), F.col("DST"), F.col("W").cast("bigint").alias("W")),
         checkpoint,
     )
     if bool(ed.where(F.col("W") < 0).head(1)):
         raise ValueError("sssp_hops requires non-negative edge weights")
-    dsize = len(set(sources))  # distance-map cardinality, tracked per round
-    # the distance map can never exceed |sources| + |edges| (only DST
-    # nodes enter): when that bound fits the broadcast ceiling the policy
-    # can never flip to shuffled-hash, so the per-hop sizing counts are
-    # pure overhead -- skip them (the measured e_cnt makes the bound a
-    # certainty, not a guess)
-    cap = (
-        _BCAST_MAX_NODES if _BCAST_MAX_NODES is not None else _bcast_row_ceiling(2)
-    )
-    never_shj = e_cnt is not None and dsize + e_cnt <= cap
+    # the distance map can never exceed |sources| + |edges| rows (only DST
+    # nodes enter), so that bound sizes every hop after the first; a
+    # per-hop count is paid only when the bound could flip the join policy
+    # and a checkpoint makes the count cheap (without one it would
+    # recompute every prior hop, O(h^2))
+    size = len(set(sources))
+    bound = size + (ed.count() if n_edges is None else n_edges)
+    exact = checkpoint and bound > _bcast_row_ceiling(2)
     for h in range(max_hops):
-        dm = _node_side(dist, dsize)
-        relaxed = ed.join(dm, ed["SRC"] == dm["NODE"]).select(
-            F.col("DST").alias("NODE"), (F.col("DIST") + F.col("W")).alias("DIST")
+        relaxed = _hop(
+            ed, dist, size, [F.col("DST").alias("NODE"), (F.col("DIST") + F.col("W")).alias("DIST")]
         )
-        dist = (
+        dist = _cut(
             dist.unionByName(relaxed)
             .groupBy("NODE")
-            .agg(F.min("DIST").cast("bigint").alias("DIST"))
+            .agg(F.min("DIST").cast("bigint").alias("DIST")),
+            checkpoint,
         )
-        if checkpoint:
-            dist = dist.localCheckpoint(eager=False)
-            if h + 1 < max_hops and not never_shj:
-                # bounded scalar sizing the next round's policy; ALSO
-                # shares the round's materialization with the next hop's
-                # broadcast. With checkpoint=False the lineage is never
-                # cut, so a per-hop count would recompute every prior hop
-                # (O(h^2), ADVICE r8) -- the seed-count policy stands.
-                dsize = dist.count()
+        size = dist.count() if exact and h + 1 < max_hops else bound
     return dist

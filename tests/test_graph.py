@@ -772,6 +772,104 @@ class TestNodeSidePolicy:
         under = G._node_side(frame, 10)._jdf.queryExecution().logical().toString()
         assert "broadcast" in under.lower()
 
+    def test_byte_budget_env_must_be_an_integer(self, monkeypatch):
+        from aws_glue_cdc_metrics_job_spark.operators import graph as G
+
+        monkeypatch.setenv("SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES", "256MB")
+        with pytest.raises(ValueError, match="SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES"):
+            G._bcast_row_ceiling(2)
+        monkeypatch.setenv("SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES", str(10 * 80))
+        assert G._bcast_row_ceiling(2) == 10
+
+    def test_unchecked_sssp_sizes_later_hops_from_an_upper_bound(self, spark, monkeypatch):
+        """ADVICE r9: without checkpoints the distance map is never counted,
+        so the size handed to the join policy must still bound it (seeds +
+        edges), not stay at the seed count."""
+        from aws_glue_cdc_metrics_job_spark.operators import graph as G
+
+        # the chain reaches 4 nodes; a 2-row ceiling must flip hops 2-3
+        monkeypatch.setattr(G, "_bcast_row_ceiling", lambda n_cols: 2)
+        edges = spark.createDataFrame(
+            [(1, 2, 1), (2, 3, 1), (3, 4, 1)], "SRC long, DST long, W long"
+        )
+        out = G.sssp_hops(edges, [1], max_hops=3, checkpoint=False)
+        plan = out._jdf.queryExecution().logical().toString().lower()
+        assert "shuffle_hash" in plan
+        assert {r["NODE"]: r["DIST"] for r in out.collect()} == {1: 0, 2: 1, 3: 2, 4: 3}
+
+
+_W_EDGES = [(1, 2, 3), (1, 3, 1), (2, 3, 2), (3, 1, 5), (4, 1, 2), (2, 1, 1)]
+
+# every graph operator that takes ``checkpoint``, called with it off
+_UNCHECKED = {
+    "triangle_counts": lambda G, e, w, p: G.triangle_counts(e, checkpoint=False),
+    "pagerank": lambda G, e, w, p: G.pagerank(e, iterations=2, checkpoint=False),
+    "pagerank_bucketed": lambda G, e, w, p: G.pagerank_bucketed(
+        e, "unck_pr", iterations=2, num_buckets=2, path=p, checkpoint=False),
+    "personalized_pagerank": lambda G, e, w, p: G.personalized_pagerank(
+        e, seeds=[1], iterations=2, checkpoint=False),
+    "label_propagation": lambda G, e, w, p: G.label_propagation(e, checkpoint=False),
+    "hits": lambda G, e, w, p: G.hits(e, checkpoint=False),
+    "hits_bucketed": lambda G, e, w, p: G.hits_bucketed(
+        e, "unck_hits", num_buckets=2, path=p, checkpoint=False),
+    "common_neighbor_link_prediction": lambda G, e, w, p:
+        G.common_neighbor_link_prediction(e, checkpoint=False),
+    "katz_centrality": lambda G, e, w, p: G.katz_centrality(e, checkpoint=False),
+    "bfs_hops": lambda G, e, w, p: G.bfs_hops(e, [1], checkpoint=False),
+    "pagerank_weighted": lambda G, e, w, p: G.pagerank_weighted(
+        w, iterations=2, checkpoint=False),
+    "pagerank_weighted_bucketed": lambda G, e, w, p: G.pagerank_weighted_bucketed(
+        w, "unck_wpr", iterations=2, num_buckets=2, path=p, checkpoint=False),
+    "sssp_hops": lambda G, e, w, p: G.sssp_hops(
+        w.withColumnRenamed("WEIGHT", "W"), [1], checkpoint=False),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_UNCHECKED))
+def test_checkpoint_false_leaves_no_checkpoint_blocks(spark, tmp_path, op):
+    """``checkpoint=False`` means no localCheckpoint anywhere -- not in
+    the edge prep, not in the hop loop (ADVICE r9: hits_bucketed)."""
+    from aws_glue_cdc_metrics_job_spark.operators import graph as G
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {i.id() for i in jsc.getRDDStorageInfo()}
+
+    edges = spark.createDataFrame([(s, d) for s, d, _ in _W_EDGES], "SRC long, DST long")
+    weighted = spark.createDataFrame(_W_EDGES, "SRC long, DST long, WEIGHT long")
+    before = stored()
+    _UNCHECKED[op](G, edges, weighted, str(tmp_path / "t")).collect()
+    assert stored() - before == set()
+    for t in ("unck_pr", "unck_hits_src", "unck_hits_dst", "unck_wpr"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _build_jobs(spark, group, build) -> int:
+    """Spark jobs launched while ``build`` constructs (not collects) a frame."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_job_counts_pinned(spark):
+    """Jobs launched while BUILDING (before any action) are pinned. Under
+    AQE each lazy localCheckpoint runs its plan's shuffle stages as soon
+    as the next frame is planned, so a hop that adds a stage or an eager
+    scalar shows up here. The counts are the ones the per-operator loops
+    launched before they shared one kernel."""
+    from aws_glue_cdc_metrics_job_spark.operators.graph import hits
+
+    df = spark.createDataFrame(EDGES, "SRC long, DST long")
+    pr = _build_jobs(spark, "build-pagerank", lambda: pagerank(df, iterations=3, symmetric=True))
+    assert pr == 20
+    assert _build_jobs(spark, "build-hits", lambda: hits(df, iterations=2)) == 34
+
 
 def test_null_baskets_emit_no_pairs(spark):
     """ADVICE r8: NULL basket ids must produce no co-occurrence pairs
