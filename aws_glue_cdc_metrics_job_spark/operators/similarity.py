@@ -8,8 +8,15 @@ Two tiers, per the standard ANN playbook:
   the 100TB path, since each lookup touches 1/K of the corpus and cells can
   be written as parquet partitions for pruning.
 
-All math is built-in higher-order functions (zip_with/aggregate) on
-double-cast arrays -- JVM-side, no Python in the hot loop.
+Every exact cosine goes through one scorer, _cos_matrix: numpy over whole
+Arrow batches (mapInPandas / applyInPandas), dots and norms accumulated
+SEQUENTIALLY per dimension -- the IEEE-754 operation order of DuckDB's
+list_dot_product, so the 6-dp cosines match the oracle bit for bit. The
+broadcast side (queries or centroids) reaches the driver through
+_collect_small, one bounded collect that raises instead of OOMing the
+driver. The query-side probe and the within-cell ranking of ivf_topk stay
+declarative: unrolled codegen expressions (dot/norm/cosine) with the same
+add order.
 """
 
 from __future__ import annotations
@@ -98,18 +105,38 @@ def _rhu_np(x, n: int = 6):
     return np.floor(x * s + 0.5) / s
 
 
-def _collect_centroids(centroids: DataFrame, centroid_id_col: str, vec_col: str):
-    """Driver-side centroid matrix, CELL-ascending (so a first-max argmax
-    breaks sim ties toward the LOWEST cell id, matching the declarative
-    ORDER BY sim DESC, CELL). Centroids are broadcast-sized by contract."""
+#: Row cap on the broadcast side (queries or centroids) an exact scan
+#: collects to the driver: an unbounded "query" frame that should have been
+#: the corpus fails with a clear error instead of a driver OOM at scale.
+MAX_BROADCAST_ROWS = 100_000
+
+
+def _collect_small(df: DataFrame, id_col: str, vec_col: str, cap: int):
+    """(ids, float64 matrix) of a broadcast-sized frame, id-ascending, from
+    ONE bounded job: orderBy + limit(cap + 1) plans a TakeOrderedAndProject,
+    so a frame over ``cap`` rows raises without ever being collected whole.
+    Id order lets a first-max argmax break score ties toward the LOWEST
+    id, matching the declarative ORDER BY sim DESC, id."""
     import numpy as np
 
-    rows = sorted(
-        centroids.select(centroid_id_col, vec_col).collect(), key=lambda r: r[0]
-    )
+    rows = df.select(id_col, vec_col).orderBy(id_col).limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"the broadcast side has more than {cap} query rows or centroids; "
+            f"swap the sides (the big frame is the corpus) or raise the cap "
+            f"explicitly."
+        )
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
     return ids, mat
+
+
+def _cos_matrix(A, B):
+    """6-dp cosines of every row of A against every row of B, dots and
+    norms in sequential order: bit-identical to the oracle's
+    FLOOR(list_dot_product(a, b) / (sqrt(..) * sqrt(..)) * 1e6 + 0.5) / 1e6.
+    Products commute exactly, so _cos_matrix(B, A) is the transpose."""
+    return _rhu_np(_seq_dots(A, B) / (_seq_sq_norms(A)[:, None] * _seq_sq_norms(B)[None, :]))
 
 
 def brute_force_topk(
@@ -118,94 +145,60 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
-    arrow: bool = True,
+    max_queries: int = MAX_BROADCAST_ROWS,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query set against the
     corpus, rank per query. Excludes self-matches. Deterministic: ranking
     key is (rounded cosine desc, neighbor id asc).
 
-    Default path (``arrow=True``): the query set is collected once (it is
-    broadcast-sized by contract) and each corpus partition scores a whole
-    Arrow batch against the query matrix in numpy with sequential
-    per-dimension accumulation -- bit-identical cosines to the declarative
-    expression and the DuckDB oracle (see _seq_dots; products commute
-    exactly, so scoring (corpus x queries) preserves the (query x corpus)
-    values). Per-partition, only the k+1 best rows per query survive under
-    the final (rounded cosine desc, id asc) order -- the +1 absorbs the
+    The query set is collected once (_collect_small; more than
+    ``max_queries`` rows raise a ValueError) and each corpus partition
+    scores a whole Arrow batch against the query matrix with _cos_matrix.
+    Per partition, only the k+1 best rows per query survive under the
+    final (rounded cosine desc, id asc) order -- the +1 absorbs the
     self-match removed later -- so the shuffle carries k+1 rows per query
-    per partition into the global window rank.
+    per partition into the global window rank."""
+    import numpy as np
+    import pandas as pd
 
-    ``arrow=False`` keeps the declarative form: each side's norm computed
-    once per ROW before the broadcast crossJoin, ranked per query."""
-    if arrow:
-        import numpy as np
-        import pandas as pd
+    q_ids, Q = _collect_small(queries, id_col, vec_col, max_queries)
+    if len(q_ids) == 0:
+        return corpus.sparkSession.createDataFrame(
+            [], "QUERY_ID long, NEIGHBOR_ID long, COSINE double, RANK int"
+        )
+    # same small-input parallelism guard as assign_cells
+    corpus = ensure_min_parallelism(corpus)
+    b_q = corpus.sparkSession.sparkContext.broadcast((q_ids, Q))
 
-        q_rows = sorted(queries.select(id_col, vec_col).collect(), key=lambda r: r[0])
-        if not q_rows:
-            empty = corpus.sparkSession.createDataFrame(
-                [], "QUERY_ID long, NEIGHBOR_ID long, COSINE double, RANK int"
+    def score(batches):
+        qids, qm = b_q.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].to_numpy()
+            cos = _cos_matrix(np.array(list(pdf[vec_col]), dtype=np.float64), qm)
+            top = min(k + 1, len(ids))
+            out_q, out_n, out_c = [], [], []
+            for j in range(len(qids)):
+                # exact final order: rounded cosine desc, neighbor id asc
+                idx = np.lexsort((ids, -cos[:, j]))[:top]
+                out_q.append(np.full(top, qids[j]))
+                out_n.append(ids[idx])
+                out_c.append(cos[idx, j])
+            yield pd.DataFrame(
+                {
+                    "QUERY_ID": np.concatenate(out_q),
+                    "NEIGHBOR_ID": np.concatenate(out_n),
+                    "COSINE": np.concatenate(out_c),
+                }
             )
-            return empty
-        q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-        Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-        nq = _seq_sq_norms(Q)
-        spark = corpus.sparkSession
-        # same small-input parallelism guard as assign_cells
-        corpus = ensure_min_parallelism(corpus)
-        b_q = spark.sparkContext.broadcast((q_ids, Q, nq))
 
-        def score(batches):
-            qids, qm, qn = b_q.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf[id_col].to_numpy()
-                A = np.array(list(pdf[vec_col]), dtype=np.float64)
-                cos = _rhu_np(_seq_dots(A, qm) / (_seq_sq_norms(A)[:, None] * qn[None, :]))
-                top = min(k + 1, len(ids))
-                out_q, out_n, out_c = [], [], []
-                for j in range(len(qids)):
-                    # exact final order: rounded cosine desc, neighbor id asc
-                    idx = np.lexsort((ids, -cos[:, j]))[:top]
-                    out_q.append(np.full(top, qids[j]))
-                    out_n.append(ids[idx])
-                    out_c.append(cos[idx, j])
-                yield pd.DataFrame(
-                    {
-                        "QUERY_ID": np.concatenate(out_q),
-                        "NEIGHBOR_ID": np.concatenate(out_n),
-                        "COSINE": np.concatenate(out_c),
-                    }
-                )
-
-        partial = corpus.select(id_col, vec_col).mapInPandas(
-            score, "QUERY_ID long, NEIGHBOR_ID long, COSINE double"
-        )
-        pairs = partial.filter(F.col("QUERY_ID") != F.col("NEIGHBOR_ID"))
-        return top_k_per_group(
-            pairs,
-            ["QUERY_ID"],
-            [F.col("COSINE").desc(), F.col("NEIGHBOR_ID")],
-            k=k,
-            rank_col="RANK",
-        )
-
-    dim = dim if dim is not None else probe_dim(corpus, vec_col)
-    q = as_double_vec(queries, vec_col).select(
-        F.col(id_col).alias("QUERY_ID"), F.col(vec_col).alias("__qv")
-    ).withColumn("__nq", norm("__qv", dim))
-    c = as_double_vec(corpus, vec_col).select(
-        F.col(id_col).alias("NEIGHBOR_ID"), F.col(vec_col).alias("__cv")
-    ).withColumn("__nc", norm("__cv", dim))
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("QUERY_ID") != F.col("NEIGHBOR_ID"))
-        .withColumn("COSINE", rhu(dot("__qv", "__cv", dim) / (F.col("__nq") * F.col("__nc")), 6))
+    partial = corpus.select(id_col, vec_col).mapInPandas(
+        score, "QUERY_ID long, NEIGHBOR_ID long, COSINE double"
     )
+    pairs = partial.filter(F.col("QUERY_ID") != F.col("NEIGHBOR_ID"))
     return top_k_per_group(
-        pairs.select("QUERY_ID", "NEIGHBOR_ID", "COSINE"),
+        pairs,
         ["QUERY_ID"],
         [F.col("COSINE").desc(), F.col("NEIGHBOR_ID")],
         k=k,
@@ -219,95 +212,51 @@ def assign_cells(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroid_id_col: str = "centroid_id",
-    dim: int | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """IVF assignment: nearest centroid per vector by cosine. The output's
     CELL column is the partition key for the ANN index layout; all corpus
     columns pass through.
 
-    Default path (``arrow=True``): centroids are collected once (they are
+    Centroids are collected once (_collect_small, CELL-ascending; they are
     broadcast-sized by contract) and each corpus partition streams through
-    mapInPandas, scoring a whole Arrow batch against the centroid matrix in
-    numpy. Accumulation is SEQUENTIAL per dimension (see _seq_dots), so
-    every similarity -- and therefore every assignment -- is bit-identical
-    to the declarative expression form; ties on the rounded sim go to the
-    lowest CELL via first-max argmax over a CELL-ascending matrix. This is
-    the dense-math escape hatch the 100TB design calls for: the |corpus| x
-    K score matrix never materializes as rows, no shuffle, no join --
-    measured ~40x faster than the expression form at 20k x 646 (the
+    mapInPandas, scoring a whole Arrow batch against the centroid matrix
+    with _cos_matrix, so every similarity -- and therefore every
+    assignment -- is bit-identical to the oracle; ties on the rounded sim
+    go to the lowest CELL via first-max argmax. This is the dense-math
+    escape hatch the 100TB design calls for: the |corpus| x K score matrix
+    never materializes as rows, no shuffle, no join -- measured ~40x
+    faster than a broadcast-crossJoin expression form at 20k x 646 (that
     |corpus| x K row explosion runs outside whole-stage codegen as a
     BroadcastNestedLoopJoin and evaluates the unrolled dot per pair on the
-    interpreted path).
+    interpreted path)."""
+    import numpy as np
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    ``arrow=False`` keeps the pure declarative form: broadcast crossJoin +
-    map-side-combinable max_by argmax (one candidate row per vector per
-    partition reaches the shuffle)."""
-    if arrow:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.types import LongType, StructField, StructType
+    cell_ids, cmat = _collect_small(centroids, centroid_id_col, vec_col, MAX_BROADCAST_ROWS)
+    out_schema = StructType(list(corpus.schema.fields) + [StructField("CELL", LongType())])
+    if len(cell_ids) == 0:
+        # no centroids -> no rows (what the oracle's cross join gives)
+        return corpus.sparkSession.createDataFrame([], out_schema)
+    # Scoring is O(|corpus| x K) -- far heavier than the input bytes --
+    # so a compact input (one small parquet file -> 1-2 partitions) must
+    # not pin the whole scan to 1-2 cores.
+    corpus = ensure_min_parallelism(corpus)
+    b_cents = corpus.sparkSession.sparkContext.broadcast((cell_ids, cmat))
 
-        cell_ids, cmat = _collect_centroids(centroids, centroid_id_col, vec_col)
-        if len(cell_ids) == 0:
-            # Parity with the crossJoin form: no centroids -> no rows.
-            out_schema = StructType(list(corpus.schema.fields) + [StructField("CELL", LongType())])
-            return corpus.sparkSession.createDataFrame([], out_schema)
-        ncent = _seq_sq_norms(cmat)
-        spark = corpus.sparkSession
-        # Scoring is O(|corpus| x K) -- far heavier than the input bytes --
-        # so a compact input (one small parquet file -> 1-2 partitions) must
-        # not pin the whole scan to 1-2 cores.
-        corpus = ensure_min_parallelism(corpus)
-        b_ids = spark.sparkContext.broadcast(cell_ids)
-        b_cmat = spark.sparkContext.broadcast(cmat)
-        b_ncent = spark.sparkContext.broadcast(ncent)
-        out_schema = StructType(list(corpus.schema.fields) + [StructField("CELL", LongType())])
+    def assign(batches):
+        ids, cm = b_cents.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            A = np.array(list(pdf[vec_col]), dtype=np.float64)
+            best = np.empty(len(pdf), dtype=np.int64)
+            # Row-chunked so the (chunk x K) sim matrix stays small; first-max
+            # argmax on CELL-ascending columns = ties to the lowest cell
+            for lo in range(0, len(pdf), 4096):
+                best[lo : lo + 4096] = ids[np.argmax(_cos_matrix(A[lo : lo + 4096], cm), axis=1)]
+            yield pdf.assign(CELL=best)
 
-        def assign(batches):
-            ids, cm, nc = b_ids.value, b_cmat.value, b_ncent.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                A = np.array(list(pdf[vec_col]), dtype=np.float64)
-                best = np.empty(len(pdf), dtype=np.int64)
-                # Row-chunked so the (chunk x K) sim matrix stays small.
-                for lo in range(0, len(pdf), 4096):
-                    hi = min(lo + 4096, len(pdf))
-                    chunk = A[lo:hi]
-                    sims = _seq_dots(chunk, cm)
-                    sims /= _seq_sq_norms(chunk)[:, None] * nc[None, :]
-                    # first-max argmax on CELL-ascending columns = ties to
-                    # the lowest cell, after the same half-up rounding the
-                    # declarative form applies
-                    best[lo:hi] = ids[np.argmax(_rhu_np(sims), axis=1)]
-                yield pdf.assign(CELL=best)
-
-        return corpus.mapInPandas(assign, out_schema)
-
-    dim = dim if dim is not None else probe_dim(corpus, vec_col)
-    c = as_double_vec(corpus, vec_col).withColumnRenamed(vec_col, "__v").withColumn(
-        "__nv", norm("__v", dim)
-    )
-    cents = as_double_vec(centroids, vec_col).select(
-        F.col(centroid_id_col).alias("CELL"), F.col(vec_col).alias("__cent")
-    ).withColumn("__ncent", norm("__cent", dim))
-    scored = c.crossJoin(F.broadcast(cents)).withColumn(
-        "__sim", rhu(dot("__v", "__cent", dim) / (F.col("__nv") * F.col("__ncent")), 6)
-    )
-    out_cols = [f for f in c.columns if f not in ("__nv",)] + ["CELL"]
-    best = (
-        scored.groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct(*[f for f in out_cols if f != id_col]),
-                # best = highest rounded sim, ties to the LOWEST cell id
-                F.struct(F.col("__sim"), (-F.col("CELL")).alias("__negcell")),
-            ).alias("__best")
-        )
-        .select(F.col(id_col), "__best.*")
-    )
-    return best.withColumnRenamed("__v", vec_col)
+    return corpus.mapInPandas(assign, out_schema)
 
 
 def probe_cells(
@@ -358,9 +307,9 @@ def ivf_topk(
     neighbors outside all probed cells; raise ``nprobe`` (cost x nprobe/K)
     or the centroid count to trade cost for recall."""
     dim = dim if dim is not None else probe_dim(corpus, vec_col)
-    # arrow assign_cells passes the original (float32) vectors through --
+    # assign_cells passes the original (float32) vectors through --
     # re-widen before any pair math so every product is double-precision
-    corpus_cells = as_double_vec(assign_cells(corpus, centroids, id_col, vec_col, dim=dim), vec_col)
+    corpus_cells = as_double_vec(assign_cells(corpus, centroids, id_col, vec_col), vec_col)
     query_cells = probe_cells(queries, centroids, nprobe, id_col, vec_col, dim=dim)
     c = corpus_cells.select(
         "CELL", F.col(id_col).alias("NEIGHBOR_ID"), F.col(vec_col).alias("__cv")
@@ -388,7 +337,6 @@ def cosine_dup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: IVF-cell blocking (assign every
     vector to its nearest centroid, one broadcast pass), then the quadratic
@@ -400,7 +348,7 @@ def cosine_dup_pairs(
     import numpy as np
     import pandas as pd
 
-    cells = assign_cells(corpus, centroids, id_col, vec_col, dim=dim)
+    cells = assign_cells(corpus, centroids, id_col, vec_col)
 
     def cell_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
         # Sorting by id makes positional i<j equal to ID_A < ID_B.
@@ -412,8 +360,7 @@ def cosine_dup_pairs(
                 {"ID_A": "int64", "ID_B": "int64", "COSINE": "float64"}
             )
         A = np.array(list(pdf[vec_col]), dtype=np.float64)
-        nrm = _seq_sq_norms(A)
-        cos = _rhu_np(_seq_dots(A, A) / (nrm[:, None] * nrm[None, :]))
+        cos = _cos_matrix(A, A)
         ia, ib = np.triu_indices(n, k=1)
         keep = cos[ia, ib] >= threshold
         return pd.DataFrame(
@@ -421,113 +368,13 @@ def cosine_dup_pairs(
         )
 
     # One shuffle, keyed by the blocking unit itself; the quadratic work is
-    # n_c^2 per cell in vectorized numpy with the same sequential-order math
-    # as the expression form (bit-identical COSINE values). The former
+    # n_c^2 per cell in vectorized numpy through the one exact scorer
+    # (bit-identical COSINE values). The former
     # declarative self-join pushed the 64-term dot into a non-codegen BHJ
     # join condition (interpreted per candidate pair) and recomputed the
     # assignment once per side -- ~6x slower at the 10x scale point.
     return cells.groupBy("CELL").applyInPandas(
         cell_pairs, "ID_A long, ID_B long, COSINE double"
-    )
-
-
-#: brute_force_topk_fast collects the query frame to the driver; this cap
-#: turns a contract violation (an unbounded "query" side that should have
-#: been the corpus) into a clear error instead of a driver OOM at scale.
-MAX_FAST_TOPK_QUERIES = 100_000
-
-
-def brute_force_topk_fast(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = MAX_FAST_TOPK_QUERIES,
-) -> DataFrame:
-    """Arrow/numpy fast path for exact cosine top-k: the query set is
-    collected once (it must be broadcast-sized by contract), and each
-    corpus partition streams through mapInPandas where numpy does a
-    (batch x dim) @ (dim x nq) matmul -- SIMD instead of one interpreted
-    expression tree per element. Per-partition local top-k keeps the
-    shuffle at k rows per query per partition; a final window rank merges.
-
-    ~10-50x faster than the zip_with/aggregate expression form on wide
-    vectors. Since round 6 this path is decision-identical to
-    :func:`brute_force_topk`: cosines are rounded to 6 dp (_rhu_np, the
-    same rounding the expression form and the DuckDB oracle apply) BEFORE
-    any selection, and per-partition survivors are chosen under the exact
-    final order (rounded cosine desc, id asc) with boundary ties resolved
-    by id -- argpartition proposes a candidate cut, then every row tied
-    with the cut value is re-ranked deterministically. Raw matmul and
-    sequential accumulation can still differ in the last ulp, which
-    flips a 6-dp rounding only when a true cosine sits within ~1e-15 of a
-    half-boundary -- negligible against the graded fixture (and any
-    realistic one).
-
-    The broadcast-size contract on ``queries`` is ENFORCED: a cheap
-    limit(max_queries+1).count() probe raises before the collect if the
-    query side exceeds ``max_queries`` rows (default
-    MAX_FAST_TOPK_QUERIES) -- one oversized call must fail fast, not OOM
-    the driver."""
-    import numpy as np
-    import pandas as pd
-
-    probe = queries.select(id_col).limit(max_queries + 1).count()
-    if probe > max_queries:
-        raise ValueError(
-            f"brute_force_topk_fast collects the query frame to the driver; "
-            f"got >{max_queries} query rows. Swap the sides (the big frame "
-            f"is the corpus), raise max_queries explicitly, or use the "
-            f"distributed ivf_topk/brute_force_topk paths."
-        )
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows])
-    qm = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    spark = corpus.sparkSession
-    b_ids = spark.sparkContext.broadcast(q_ids)
-    b_qm = spark.sparkContext.broadcast(qm)
-
-    def score(batches):
-        qids, qmat = b_ids.value, b_qm.value
-        for pdf in batches:
-            cm = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = _rhu_np(cm @ qmat.T)  # (batch, nq), 6-dp like the oracle
-            cids = pdf[id_col].to_numpy()
-            top = min(k + 1, len(cids))  # +1 to survive self-match removal
-            part = np.argpartition(-sims, top - 1, axis=0)[:top]
-            out_q, out_n, out_c = [], [], []
-            for j in range(len(qids)):
-                # deterministic boundary: re-rank every row tied with the
-                # cut value under the exact final (cosine desc, id asc)
-                # order, so partition-local survivors never depend on
-                # argpartition's arbitrary tie placement
-                cut = sims[part[:, j], j].min()
-                cand = np.flatnonzero(sims[:, j] >= cut)
-                sel = cand[np.lexsort((cids[cand], -sims[cand, j]))[:top]]
-                out_q.append(np.full(len(sel), qids[j]))
-                out_n.append(cids[sel])
-                out_c.append(sims[sel, j])
-            yield pd.DataFrame(
-                {
-                    "QUERY_ID": np.concatenate(out_q),
-                    "NEIGHBOR_ID": np.concatenate(out_n),
-                    "COSINE": np.concatenate(out_c),
-                }
-            )
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        score, "QUERY_ID long, NEIGHBOR_ID long, COSINE double"
-    )
-    pairs = partial.filter(F.col("QUERY_ID") != F.col("NEIGHBOR_ID"))
-    return top_k_per_group(
-        pairs,
-        ["QUERY_ID"],
-        [F.col("COSINE").desc(), F.col("NEIGHBOR_ID")],
-        k=k,
-        rank_col="RANK",
     )
 
 
@@ -537,12 +384,10 @@ def kmeans_update(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroid_id_col: str = "centroid_id",
-    dim: int | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """One Lloyd/k-means update over the current IVF centroids: assign every
     vector to its nearest centroid (cosine, via assign_cells -- bit-identical
-    to the declarative form), then recompute each cell's elementwise mean.
+    to the oracle), then recompute each cell's elementwise mean.
 
     Returns long form (CELL, DIM, N_MEMBERS, CENTROID_VAL): one row per
     (cell, dimension), CENTROID_VAL rounded to 6 dp. Cells that lose all
@@ -558,9 +403,7 @@ def kmeans_update(
     Scale: assignment is the narrow Arrow pass (no shuffle); the mean is
     posexplode + two-level-friendly partial aggregation shuffling only
     (cell, dim) pairs -- K*dim rows however large the corpus."""
-    assigned = assign_cells(
-        corpus, centroids, id_col, vec_col, centroid_id_col, dim=dim, arrow=arrow
-    )
+    assigned = assign_cells(corpus, centroids, id_col, vec_col, centroid_id_col)
     ex = assigned.select(
         "CELL", F.posexplode(F.col(vec_col).cast("array<double>")).alias("DIM", "__x")
     )
@@ -577,7 +420,6 @@ def kmeans_train(
     iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Train IVF centroids with bounded Lloyd iterations. Initialization is
     deterministic: the k lowest md5-hashed vector ids seed the cells (a
@@ -604,7 +446,7 @@ def kmeans_train(
     )
     cents = seeds
     for _ in range(iters):
-        upd = kmeans_update(corpus, cents, id_col, vec_col, dim=dim)
+        upd = kmeans_update(corpus, cents, id_col, vec_col)
         new_cents = (
             upd.groupBy("CELL")
             .agg(
@@ -765,7 +607,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus by nearest centroid, call two
@@ -790,7 +631,7 @@ def semantic_dedup(
     that is the published algorithm's own approximation.
 
     Returns the surviving corpus rows, all columns passed through."""
-    pairs = cosine_dup_pairs(corpus, centroids, threshold, id_col, vec_col, dim)
+    pairs = cosine_dup_pairs(corpus, centroids, threshold, id_col, vec_col)
     losers = pairs.select(F.col("ID_B").alias(id_col)).distinct()
     return corpus.join(losers, id_col, "left_anti")
 
@@ -812,8 +653,8 @@ def int8_quantize(
 
     Scan-stage map, no shuffle. The array transforms run as interpreted
     HOF expressions (~us/element); at corpus scale swap the body for an
-    Arrow ``mapInPandas`` kernel like ``brute_force_topk_fast`` -- the
-    contract (and this exact arithmetic, reproduced by numpy doubles)
+    Arrow ``mapInPandas`` kernel like the one in ``brute_force_topk`` --
+    the contract (and this exact arithmetic, reproduced by numpy doubles)
     stays fixed.
 
     Returns (id_col, AMAX double, Q int array).
@@ -1065,7 +906,7 @@ def ivf_pq_topk(
 
     Returns (QUERY_ID, id, ADC_DIST) -- up to k rows per query."""
     shape = _pq_shape(codebook)
-    cells = assign_cells(corpus, centroids, id_col, vec_col, dim=dim)
+    cells = assign_cells(corpus, centroids, id_col, vec_col)
     codes = pq_encode(cells, codebook, id_col, vec_col, carry_cols=["CELL"], shape=shape)
     probed = probe_cells(queries, centroids, nprobe, id_col, vec_col, dim=dim).select(
         F.col(id_col).alias("QUERY_ID"), "CELL"
@@ -1129,7 +970,7 @@ def pq_train(
     round runs one distributed pq_train_update; the m*ksub*dsub long-form
     means -- broadcast-sized by construction -- are collected to rebuild
     the codebook frame, which is the documented-contract driver traffic
-    (identical in kind to _collect_centroids). Codes that lose all members
+    (identical in kind to _collect_small). Codes that lose all members
     keep their previous entry (the standard empty-cell policy).
 
     Returns the trained codebook frame (SUB, CODE, C0..C{dsub-1})."""
@@ -1182,7 +1023,6 @@ def semantic_cross_pairs(
     threshold: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Cross-corpus near matches by embedding cosine: every (corpus,
     bench) pair with cosine >= threshold, blocked by SHARED IVF cells --
@@ -1202,12 +1042,12 @@ def semantic_cross_pairs(
     import numpy as np
     import pandas as pd
 
-    a = assign_cells(
-        corpus.select(id_col, vec_col), centroids, id_col, vec_col, dim=dim
-    ).select("CELL", F.col(id_col), F.col(vec_col), F.lit(0).alias("__side"))
-    b = assign_cells(
-        bench.select(id_col, vec_col), centroids, id_col, vec_col, dim=dim
-    ).select("CELL", F.col(id_col), F.col(vec_col), F.lit(1).alias("__side"))
+    a = assign_cells(corpus.select(id_col, vec_col), centroids, id_col, vec_col).select(
+        "CELL", F.col(id_col), F.col(vec_col), F.lit(0).alias("__side")
+    )
+    b = assign_cells(bench.select(id_col, vec_col), centroids, id_col, vec_col).select(
+        "CELL", F.col(id_col), F.col(vec_col), F.lit(1).alias("__side")
+    )
 
     def cell_cross(pdf: "pd.DataFrame") -> "pd.DataFrame":
         empty = pd.DataFrame({"CORPUS_ID": [], "BENCH_ID": [], "COSINE": []}).astype(
@@ -1217,9 +1057,10 @@ def semantic_cross_pairs(
         cb = pdf[pdf["__side"] == 1].sort_values(id_col)
         if len(ca) == 0 or len(cb) == 0:
             return empty
-        A = np.array(list(ca[vec_col]), dtype=np.float64)
-        B = np.array(list(cb[vec_col]), dtype=np.float64)
-        cos = _rhu_np(_seq_dots(A, B) / (_seq_sq_norms(A)[:, None] * _seq_sq_norms(B)[None, :]))
+        cos = _cos_matrix(
+            np.array(list(ca[vec_col]), dtype=np.float64),
+            np.array(list(cb[vec_col]), dtype=np.float64),
+        )
         ia, ib = np.nonzero(cos >= threshold)
         return pd.DataFrame(
             {
@@ -1241,13 +1082,12 @@ def semantic_decontaminate(
     threshold: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Drop corpus rows semantically too close to any benchmark item
     (cosine >= threshold under shared-cell blocking). All corpus columns
     pass through; the anti-join shuffles ids only."""
     dirty = (
-        semantic_cross_pairs(corpus, bench, centroids, threshold, id_col, vec_col, dim)
+        semantic_cross_pairs(corpus, bench, centroids, threshold, id_col, vec_col)
         .select(F.col("CORPUS_ID").alias(id_col))
         .distinct()
     )
@@ -1519,7 +1359,7 @@ def mmr_select(
     Scale shape: the DISTRIBUTED part is the candidate pool --
     brute_force_topk scores the whole corpus against the query and keeps
     ``pool`` rows. The greedy loop then runs on the driver over that
-    bounded pool (pool vectors collected, pairwise cosines via _seq_dots
+    bounded pool (pool vectors collected, pairwise cosines via _cos_matrix
     -- the same sequential IEEE accumulation as the oracle's
     list_dot_product, so bit-identical), k * pool integer comparisons --
     the pr_curve bounded-collect pattern, not a distributed iteration.
@@ -1558,14 +1398,15 @@ def mmr_select(
     A = np.zeros((len(ids), len(vec_rows[0]["__v"])), dtype=np.float64)
     for r in vec_rows:
         A[order[int(r[id_col])]] = r["__v"]
-    dots = _seq_dots(A, A)
-    norms = np.sqrt(np.diag(dots))
-    sim = {}
-    for i, vi in enumerate(ids):
-        for j, vj in enumerate(ids):
-            if vi != vj:
-                c = dots[i, j] / (norms[i] * norms[j])
-                sim[(vi, vj)] = int(math.floor(c * 10**6 + 0.5))
+    # exact ppm integers: the 6-dp lattice value times 1e6 is within 1e-9
+    # of an integer, so round() recovers FLOOR(c * 1e6 + 0.5) exactly
+    cos = _cos_matrix(A, A)
+    sim = {
+        (vi, vj): round(float(cos[i, j]) * 10**6)
+        for i, vi in enumerate(ids)
+        for j, vj in enumerate(ids)
+        if vi != vj
+    }
     lam_c = 10**6 - lam_ppm
     selected: list[tuple[int, int, int, int]] = []
     remaining = set(ids)

@@ -19,3 +19,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def build_jobs(spark):
+    """Counts the Spark jobs launched while ``build`` constructs (not
+    collects) a frame, by running it under a job group and asking the
+    status tracker for that group's jobs."""
+
+    def count(group, build) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

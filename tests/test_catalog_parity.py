@@ -7,7 +7,8 @@ the rows-only check runs over, with named bounds:
 
 - docs_minhash_lsh_pairs  ⊇ brute-force n-gram Jaccard >= 0.9 pairs
   (b=32, r=4 banding -> per-pair miss probability < 1e-4 at J=0.9)
-- emb_cosine_topk_fast    == emb_cosine_topk exactly (same math, numpy path)
+- emb_cosine_topk_fast    == emb_cosine_topk exactly (both names run the one
+                          exact scorer, similarity.brute_force_topk)
 - emb_ivf_topk            recall >= 0.6 vs exact top-k (nprobe=1 bound) and
                           perfect within-cell agreement
 - events_approx_distinct_users within 5% of exact (rsd=0.02 -> ~3 sigma)

@@ -845,19 +845,7 @@ def test_checkpoint_false_leaves_no_checkpoint_blocks(spark, tmp_path, op):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def _build_jobs(spark, group, build) -> int:
-    """Spark jobs launched while ``build`` constructs (not collects) a frame."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_build_job_counts_pinned(spark):
+def test_build_job_counts_pinned(spark, build_jobs):
     """Jobs launched while BUILDING (before any action) are pinned. Under
     AQE each lazy localCheckpoint runs its plan's shuffle stages as soon
     as the next frame is planned, so a hop that adds a stage or an eager
@@ -866,9 +854,9 @@ def test_build_job_counts_pinned(spark):
     from aws_glue_cdc_metrics_job_spark.operators.graph import hits
 
     df = spark.createDataFrame(EDGES, "SRC long, DST long")
-    pr = _build_jobs(spark, "build-pagerank", lambda: pagerank(df, iterations=3, symmetric=True))
+    pr = build_jobs("build-pagerank", lambda: pagerank(df, iterations=3, symmetric=True))
     assert pr == 20
-    assert _build_jobs(spark, "build-hits", lambda: hits(df, iterations=2)) == 34
+    assert build_jobs("build-hits", lambda: hits(df, iterations=2)) == 34
 
 
 def test_null_baskets_emit_no_pairs(spark):
